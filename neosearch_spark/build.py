@@ -45,10 +45,8 @@ import json
 import os
 import shutil
 import time
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -422,112 +420,41 @@ def _tf_stream(docs: DataFrame, analyzed_fields: list[str], exact_fields: list[s
     return tokens.unionByName(whole.select("field", "term", "doc_id", "dl", "tf"))
 
 
-def _encode_blocks_batch(pdf: pd.DataFrame, avgdl: float, span: int) -> pd.DataFrame:
-    """Vectorized block encoder for one sorted partition batch.
-
-    Input columns: field, term, span_id, doc_id, tf, dl — sorted by
-    (field, term, span_id, doc_id).  Groups are detected with shift
-    compares; varint encoding runs ONCE over the whole batch and is
-    sliced per group by byte offsets (numpy throughout, no per-row
-    Python)."""
-    if len(pdf) == 0:
-        return pd.DataFrame(
-            {
-                "field": pd.Series(dtype="object"),
-                "term": pd.Series(dtype="object"),
-                "span_id": pd.Series(dtype="int64"),
-                "first_doc": pd.Series(dtype="int64"),
-                "n_docs": pd.Series(dtype="int32"),
-                "docs_enc": pd.Series(dtype="object"),
-                "tfs_enc": pd.Series(dtype="object"),
-                "dls_enc": pd.Series(dtype="object"),
-                "max_tf": pd.Series(dtype="float64"),
-                "max_tf_norm": pd.Series(dtype="float64"),
-                "enc_avgdl": pd.Series(dtype="float64"),
-                "part_id": pd.Series(dtype="int32"),
-            }
+def index_fields(params: dict) -> list[str]:
+    """Indexed fields in byte ``fid`` code order: analyzed, then
+    exact, then date/typed fields not already exact.  Reads the
+    manifest ``params`` keys, so the build and every maintenance
+    rewrite code fields identically."""
+    exact = list(params["exact_fields"])
+    fields = list(params["analyzed_fields"]) + exact + [
+        f
+        for f in list(params.get("date_fields") or {})
+        + list(params.get("typed_fields") or {})
+        if f not in exact
+    ]
+    if len(fields) > 127:
+        # fid is a tinyint: code 128 would wrap negative and numpy
+        # fancy-indexing would silently attribute postings to the
+        # wrong field
+        raise ValueError(
+            f"{len(fields)} indexed fields exceeds the 127-field "
+            "limit of the byte field-code shuffle"
         )
-    # factorized int codes: group detection in C, not per-row Python
-    # string compares
-    fcode = pd.factorize(pdf["field"], sort=False)[0]
-    tcode = pd.factorize(pdf["term"], sort=False)[0]
-    span_all = pdf["span_id"].to_numpy(dtype=np.int64)
-    doc_all = pdf["doc_id"].to_numpy(dtype=np.int64)
-    dl_all = pdf["dl"].to_numpy(dtype=np.int64)
-    # occurrence rows carry no tf (single-shuffle path); aggregated
-    # rows (streaming merge path) carry it — unify by run-sum below
-    if "tf" in pdf.columns:
-        tf_all = pdf["tf"].to_numpy(dtype=np.int64)
-    else:
-        tf_all = np.ones(len(pdf), dtype=np.int64)
-    part = int(pdf["part_id"].iloc[0]) if "part_id" in pdf else -1
+    return fields
 
-    # collapse duplicate (field, term, span, doc) runs → postings
-    p_new = np.ones(len(pdf), dtype=bool)
-    p_new[1:] = (
-        (fcode[1:] != fcode[:-1])
-        | (tcode[1:] != tcode[:-1])
-        | (span_all[1:] != span_all[:-1])
-        | (doc_all[1:] != doc_all[:-1])
+
+def field_code_col(field: F.Column, fields: list[str]) -> F.Column:
+    """Byte ``fid`` code (position in ``fields``) of a field-name
+    column.  A name missing from ``fields`` raises instead of mapping
+    to a sentinel: a negative code would index the last field in the
+    encoder and silently file the postings under it."""
+    code = F.when(field == F.lit(fields[0]), F.lit(0))
+    for i, f in enumerate(fields[1:], 1):
+        code = code.when(field == F.lit(f), F.lit(i))
+    missing = F.raise_error(
+        F.concat(F.lit("field not in the index field list: "), field)
     )
-    ps = np.nonzero(p_new)[0]
-    tf = np.add.reduceat(tf_all, ps)
-    doc_id = doc_all[ps]
-    dl = dl_all[ps]
-    span_id = span_all[ps]
-    fcode_p = fcode[ps]
-    tcode_p = tcode[ps]
-    field = pdf["field"].to_numpy()[ps]
-    term = pdf["term"].to_numpy()[ps]
-
-    new_group = np.ones(len(ps), dtype=bool)
-    new_group[1:] = (
-        (fcode_p[1:] != fcode_p[:-1])
-        | (tcode_p[1:] != tcode_p[:-1])
-        | (span_id[1:] != span_id[:-1])
-    )
-    starts = np.nonzero(new_group)[0]
-    ends = np.concatenate((starts[1:], [len(ps)]))
-
-    # delta with reset at group starts
-    deltas = np.empty(len(doc_id), dtype=np.uint64)
-    deltas[0] = doc_id[0]
-    np.subtract(doc_id[1:], doc_id[:-1], out=deltas[1:], casting="unsafe")
-    deltas[starts] = doc_id[starts]
-
-    docs_buf, docs_len = codec.varint_encode_with_lengths(deltas)
-    tfs_buf, tfs_len = codec.varint_encode_with_lengths(tf.astype(np.uint64))
-    dls_buf, dls_len = codec.varint_encode_with_lengths(dl.astype(np.uint64))
-
-    tf_norm = (tf * (K1 + 1.0)) / (tf + K1 * (1.0 - B + B * dl / avgdl))
-
-    def slices(buf: np.ndarray, lengths: np.ndarray) -> list[bytes]:
-        boff = np.concatenate(([0], np.cumsum(lengths)))
-        raw = buf.tobytes()
-        return [raw[boff[s] : boff[e]] for s, e in zip(starts, ends)]
-
-    out = pd.DataFrame(
-        {
-            "field": field[starts],
-            "term": term[starts],
-            "span_id": span_id[starts],
-            "first_doc": doc_id[starts],
-            "n_docs": (ends - starts).astype(np.int32),
-            "docs_enc": slices(docs_buf, docs_len),
-            "tfs_enc": slices(tfs_buf, tfs_len),
-            "dls_enc": slices(dls_buf, dls_len),
-            "max_tf": np.maximum.reduceat(tf, starts).astype(np.float64),
-            "max_tf_norm": np.maximum.reduceat(tf_norm, starts),
-            # pruning bounds stay valid after compactions that shift
-            # avgdl: the query side inflates max_tf_norm by
-            # max(1, avgdl_now / enc_avgdl) — a provable upper bound
-            "enc_avgdl": np.full(len(starts), avgdl, dtype=np.float64),
-            "part_id": np.full(len(starts), part, dtype=np.int32),
-        }
-    )
-    return out
-
-
+    return code.otherwise(missing).cast("tinyint").alias("fid")
 
 
 def _arrow_binary(offsets: np.ndarray, data: np.ndarray):
@@ -552,24 +479,25 @@ def _single_chunk(tbl, name: str):
 def arrow_carry_encoder(
     avgdl: float, span: int, fields: list[str], dl_bits: int | None = None
 ):
-    """mapInArrow block encoder — the zero-object fast path.
+    """mapInArrow block encoder — the one writer of occurrence and
+    posting blocks (build and every maintenance rewrite).
 
-    Same output as ``carry_encoder`` (byte-identical blocks, tested)
-    but never materializes per-row Python objects: group detection is
+    Never materializes per-row Python objects: group detection is
     vectorized Arrow string equality + numpy int compares, varint
     encoding runs once per batch (numpy), and the binary posting
-    columns are assembled directly from offset+data buffers — far
-    lighter on memory bandwidth (the scaling-critical resource on a
-    shared box) than the pandas encoder.
+    columns are assembled directly from offset+data buffers.
 
     Input batches: (fid int8, term string, packed int64) sorted by
     (fid, term, packed) within the partition, where
     ``packed = doc_id << dl_bits | dl`` (monotonic in doc_id, so the
     sort order is the doc order); with dl_bits=None, unpacked
-    (..., doc_id, dl, ...) columns instead.  The lineage ``part_id``
-    is read from ``TaskContext`` (mapInArrow runs in the same stage
-    as the post-shuffle sort, so the task partition id IS
-    ``spark_partition_id()`` of the arranged stream) — one less
+    (..., doc_id, dl, ...) columns instead.  ``fid`` indexes
+    ``fields``.  Occurrence rows (the build) carry no tf: each
+    posting's tf is its duplicate-run length.  Pre-aggregated rows
+    (maintenance) carry a ``tf`` column, summed over the run.  The
+    lineage ``part_id`` is read from ``TaskContext`` (mapInArrow runs
+    in the same stage as the post-shuffle sort, so the task partition
+    id IS ``spark_partition_id()`` of the arranged stream) — one less
     column over the JVM↔Python boundary."""
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -610,7 +538,11 @@ def arrow_carry_encoder(
         pchange[1:] |= doc[1:] != doc[:-1]
 
         ps = np.nonzero(pchange)[0]
-        tf = np.diff(np.append(ps, n)).astype(np.int64)  # run lengths
+        if "tf" in tbl.column_names:
+            tf_rows = _single_chunk(tbl, "tf").to_numpy(zero_copy_only=False)
+            tf = np.add.reduceat(tf_rows.astype(np.int64), ps)
+        else:
+            tf = np.diff(np.append(ps, n)).astype(np.int64)  # run lengths
         doc_p = doc[ps]
         dl_p = dl[ps]
         gs = np.nonzero(gchange)[0]
@@ -713,142 +645,6 @@ def arrow_carry_encoder(
             )
         if carry is not None and carry.num_rows:
             yield encode_tbl(carry, fields_arr, span, avgdl, pid)
-
-    return encode
-
-
-def arrow_grouped_encoder(
-    avgdl: float, span: int, fields: list[str], dl_bits: int
-):
-    """mapInArrow block encoder over PRE-GROUPED rows — the
-    boundary-minimal A/B'd alternative (``encoder="grouped"``).
-
-    NOT the default: byte-identical to the carry path and it does
-    move ~2.5× fewer bytes across the Arrow boundary, but the
-    measured whole-build cost of the ``collect_list`` aggregation
-    exceeds the boundary saving at low core counts (~1.7× slower at
-    2 cores, break-even at 8 on this box) — the JVM sort it removes
-    was never the bottleneck.  Kept (like the hot-term dictionary)
-    as a measured alternative: on a real cluster where the shuffle
-    crosses a NETWORK, map-side partial collect_list shrinking the
-    wire bytes ~2.5× is a different trade than on a single
-    shared-memory box.
-
-    Input batches: one row per (field, term, span) group —
-    (fid int8, term string, span_id int64, packed array<int64>) from
-    ``groupBy(fid, term, span_id).agg(collect_list(packed))``, where
-    ``packed = doc_id << dl_bits | dl``.  Versus the per-occurrence
-    encoder (``arrow_carry_encoder``) this moves ~2.5× fewer bytes
-    across the JVM↔Python Arrow boundary (the measured 0.62-scaling
-    leg on the shared-memory-bandwidth sandbox, BENCH/BASELINE.md):
-    the term string and field code cross ONCE PER GROUP instead of
-    once per occurrence, and Spark's partial aggregation shrinks the
-    shuffle the same way map-side.  The JVM sort disappears too —
-    ``collect_list`` gives no order, so each group's flattened values
-    are sorted HERE with one vectorized ``np.lexsort`` per batch
-    (packed is monotonic in doc_id, so value order IS doc order and
-    the result is independent of shuffle arrival order).
-
-    Output blocks are byte-identical to the other encoders (tested).
-    No carry logic: every input row is a complete group."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    fields_list = list(fields)
-    mask = (1 << dl_bits) - 1
-
-    def encode(it):
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        fields_arr = pa.array(fields_list, type=pa.string())
-        for batch in it:
-            tbl = pa.Table.from_batches([batch]).combine_chunks()
-            g = tbl.num_rows
-            if g == 0:
-                continue
-            fid = _single_chunk(tbl, "fid").to_numpy(zero_copy_only=False).astype(np.int64)
-            terms = _single_chunk(tbl, "term")
-            spn = _single_chunk(tbl, "span_id").to_numpy(zero_copy_only=False).astype(np.int64)
-            plist = _single_chunk(tbl, "packed")
-            offs = plist.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            offs = offs - offs[0]  # slice-safe: offsets may not start at 0
-            vals = plist.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-            n = len(vals)
-            sizes = np.diff(offs)
-            gidx = np.repeat(np.arange(g, dtype=np.int64), sizes)
-            # sort within each group only (segments stay in place):
-            # primary key gidx is already segment-contiguous, so
-            # lexsort permutes values inside their own group
-            order = np.lexsort((vals, gidx))
-            vals = vals[order]
-            doc = vals >> dl_bits
-            dl_v = vals & mask
-
-            # posting boundaries: group change or doc change; run
-            # lengths are the tf (duplicate (term, doc) occurrences)
-            pchange = np.ones(n, dtype=bool)
-            pchange[1:] = (gidx[1:] != gidx[:-1]) | (doc[1:] != doc[:-1])
-            ps = np.nonzero(pchange)[0]
-            tf = np.diff(np.append(ps, n)).astype(np.int64)
-            doc_p = doc[ps]
-            dl_p = dl_v[ps]
-            # each group's first flattened row is always a posting
-            # start, so group starts in posting space are exact
-            # searchsorted hits of the (unchanged) list offsets
-            gs_p = np.searchsorted(ps, offs[:-1])
-            ge_p = np.append(gs_p[1:], len(ps))
-
-            deltas = np.empty(len(doc_p), dtype=np.uint64)
-            if len(doc_p):
-                deltas[0] = doc_p[0]
-                np.subtract(
-                    doc_p[1:], doc_p[:-1], out=deltas[1:], casting="unsafe"
-                )
-                deltas[gs_p] = doc_p[gs_p]
-
-            docs_buf, docs_len = codec.varint_encode_with_lengths(deltas)
-            tfs_buf, tfs_len = codec.varint_encode_with_lengths(tf.astype(np.uint64))
-            dls_buf, dls_len = codec.varint_encode_with_lengths(dl_p.astype(np.uint64))
-
-            def offsets(lengths: np.ndarray) -> np.ndarray:
-                boff = np.concatenate(([0], np.cumsum(lengths)))
-                return boff[np.append(gs_p, len(ps))]
-
-            tf_norm = (tf * (K1 + 1.0)) / (
-                tf + K1 * (1.0 - B + B * dl_p / avgdl)
-            )
-            arrays = [
-                pc.take(fields_arr, pa.array(fid, type=pa.int64())),
-                terms,
-                pa.array(spn, type=pa.int64()),
-                pa.array(doc_p[gs_p], type=pa.int64()),
-                pa.array((ge_p - gs_p).astype(np.int32), type=pa.int32()),
-                _arrow_binary(offsets(docs_len), docs_buf),
-                _arrow_binary(offsets(tfs_len), tfs_buf),
-                _arrow_binary(offsets(dls_len), dls_buf),
-                pa.array(
-                    np.maximum.reduceat(tf, gs_p).astype(np.float64)
-                    if len(gs_p)
-                    else np.empty(0, np.float64),
-                    type=pa.float64(),
-                ),
-                pa.array(
-                    np.maximum.reduceat(tf_norm, gs_p)
-                    if len(gs_p)
-                    else np.empty(0, np.float64),
-                    type=pa.float64(),
-                ),
-                pa.array(np.full(g, avgdl, dtype=np.float64), type=pa.float64()),
-                pa.array(np.full(g, pid, dtype=np.int32), type=pa.int32()),
-            ]
-            names = [
-                "field", "term", "span_id", "first_doc", "n_docs",
-                "docs_enc", "tfs_enc", "dls_enc", "max_tf", "max_tf_norm",
-                "enc_avgdl", "part_id",
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return encode
 
@@ -970,128 +766,6 @@ def sample_term_boundaries(
     return bounds
 
 
-def hot_terms(
-    docs: DataFrame,
-    analyzed_fields: list[str],
-    exact_fields: list[str],
-    n_rows: int,
-    n_hot: int = 65536,
-    sample_rows: int = 200_000,
-) -> list[str]:
-    """Top-``n_hot`` terms by occurrence count over a doc sample —
-    the shuffle dictionary.  By Zipf, ~64 K hot terms cover the large
-    majority of occurrence rows, so dictionary-coding just these
-    shrinks shuffle/sort bytes per row by ~40% while the (unbounded,
-    possibly billions-strong at 10^12 turns) rare-term tail keeps its
-    strings — no full-vocabulary map is ever built or broadcast.
-
-    The dictionary affects ONLY physical routing and sort keys; index
-    CONTENT is a pure function of the data (blocks are keyed by the
-    reconstructed term strings), so a different sample — e.g. at a
-    different parallelism — yields a byte-identical logical index
-    (asserted by the scaling harness's cross-level signatures)."""
-    frac = min(1.0, sample_rows / max(n_rows, 1))
-    sample = docs.sample(fraction=frac, seed=42) if frac < 1.0 else docs
-    occ = _occurrence_stream(
-        sample, analyzed_fields, exact_fields, include_whole=False
-    )
-    rows = (
-        occ.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), F.asc("term"))  # TakeOrdered, no full sort
-        .limit(n_hot)
-        .collect()
-    )
-    return [r["term"] for r in rows]
-
-
-def coded_carry_encoder(avgdl: float, span: int, fields: list[str], vocab_bc):
-    """carry_encoder over the dictionary-coded shuffle stream.
-
-    Input rows: (fid tinyint, tcode int, term string|null, doc_id,
-    dl, part_id) sorted by (fid, tcode, term, doc_id).  Reconstructs
-    (field, term, span_id) vectorized — field from the fids list,
-    hot terms from the broadcast vocabulary, span from doc_id — then
-    delegates to the uncoded ``carry_encoder``."""
-    inner = carry_encoder(avgdl=avgdl, span=span)
-    fields_list = list(fields)
-
-    def encode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        farr = np.asarray(fields_list, dtype=object)
-        vocab = np.asarray(vocab_bc.value, dtype=object) if vocab_bc is not None else None
-
-        def decoded() -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                term = pdf["term"].to_numpy(dtype=object).copy()
-                if vocab is not None and len(vocab):
-                    tcode = pdf["tcode"].to_numpy(dtype=np.int64)
-                    hot = tcode >= 0
-                    term[hot] = vocab[tcode[hot]]
-                doc = pdf["doc_id"].to_numpy(dtype=np.int64)
-                yield pd.DataFrame(
-                    {
-                        "field": farr[pdf["fid"].to_numpy(dtype=np.int64)],
-                        "term": term,
-                        "span_id": doc // span,
-                        "doc_id": doc,
-                        "dl": pdf["dl"].to_numpy(dtype=np.int64),
-                        "part_id": pdf["part_id"].to_numpy(dtype=np.int64)
-                        if "part_id" in pdf.columns
-                        else np.full(len(pdf), -1, dtype=np.int64),
-                    }
-                )
-
-        yield from inner(decoded())
-
-    return encode
-
-
-def carry_encoder(avgdl: float, span: int):
-    """mapInPandas generator encoding sorted (field, term, span_id,
-    doc_id[, tf], dl) rows into blocks.
-
-    Arrow hands a partition over in row batches; a (term, span) group
-    can straddle a batch boundary, which would fragment its block.
-    Hold back each batch's last group and prepend it to the next
-    batch.  Carried memory on the single-shuffle path is bounded by
-    the group's OCCURRENCE rows — ≤ span docs × max per-doc tf (a doc
-    repeating one term heavily inflates it; doc length bounds per-doc
-    tf, so the worst case is span × max_dl rows ≈ a few MB, not the
-    ≤-span-postings bound that holds for pre-aggregated input)."""
-
-    def encode(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in it:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if len(pdf) == 0:
-                continue
-            last = pdf.iloc[-1]
-            tail_mask = (
-                (pdf["field"] == last["field"])
-                & (pdf["term"] == last["term"])
-                & (pdf["span_id"] == last["span_id"])
-            )
-            # boundary of the trailing group (contiguous by sort)
-            tail_start = len(pdf) - int(tail_mask.iloc[::-1].cummin().sum())
-            if tail_start == 0:
-                carry = pdf  # whole batch is one group; keep carrying
-                continue
-            carry = pdf.iloc[tail_start:].reset_index(drop=True)
-            yield _encode_blocks_batch(
-                pdf.iloc[:tail_start].reset_index(drop=True),
-                avgdl=avgdl,
-                span=span,
-            )
-        if carry is not None and len(carry):
-            yield _encode_blocks_batch(carry, avgdl=avgdl, span=span)
-
-    return encode
-
-
 class IndexBuilder:
     """Builds the persisted index at ``index_dir`` with
     checkpoint-resume (stage manifests + per-partition counters —
@@ -1105,25 +779,11 @@ class IndexBuilder:
         analyzed_fields: list[str] | None = None,
         exact_fields: list[str] | None = None,
         span: int = DEFAULT_SPAN,
-        hot_dict_min_rows: int | None = None,
-        n_hot: int = 65536,
         n_buckets: int = 32,
         date_fields: dict[str, str | None] | None = None,
         typed_fields: dict[str, str] | None = None,
         infer: bool = False,
-        encoder: str = "carry",
     ):
-        """hot_dict_min_rows: corpora at or above this row count use
-        the hot-term shuffle dictionary; None (default) disables it.
-        MEASURED OFF by default: at 3M turns the dictionary LOWERED
-        build throughput 13% at 8 cores (61.8k vs 70.8k turns/s) and
-        scaling efficiency 0.663 vs 0.749 — the broadcast hash probe
-        per occurrence row + the sampling job + Arrow null-column
-        overhead exceed what the ~40% smaller shuffle rows save on
-        this in-memory-shuffle box.  The machinery stays (content-
-        invariance is tested) because the trade can flip where
-        shuffle I/O is the bottleneck (disk-spilling clusters).
-        Neither setting affects index CONTENT — only routing/bytes."""
         self.index_dir = index_dir
         self.analyzed_fields = analyzed_fields or ["text"]
         self.exact_fields = exact_fields or []
@@ -1141,24 +801,7 @@ class IndexBuilder:
         # schemaless reflection dispatch, index.go:355-480) —
         # explicit field arguments are ignored
         self.infer = infer
-        # "carry" (default): per-occurrence repartition+sort Arrow
-        # encoder.  "grouped": collect_list-pre-grouped alternative —
-        # term strings cross the shuffle and the JVM↔Python boundary
-        # once per (field, term, span) group with map-side partial
-        # aggregation (~2.5× fewer boundary bytes), but the
-        # aggregation itself costs more than the saving on this
-        # shared-memory box (1.7× slower at 2 cores, break-even at
-        # 8) — kept A/B'd for network-shuffle clusters where wire
-        # bytes dominate.  Neither affects index CONTENT (tested
-        # byte-identical).
-        if encoder not in ("carry", "grouped"):
-            raise ValueError(
-                f"unknown encoder {encoder!r}: expected 'carry' or 'grouped'"
-            )
-        self.encoder = encoder
         self.span = span
-        self.hot_dict_min_rows = hot_dict_min_rows
-        self.n_hot = n_hot
         # bucketed block layout: n_buckets term-range directories.
         # Pruning factor for point lookups is ~n_buckets; file count
         # per build is O(tasks × n_buckets) — at cluster scale raise
@@ -1308,12 +951,12 @@ class IndexBuilder:
         # doc_id order, so files cover near-disjoint ranges and each
         # task writes to ~1-2 doc_part dirs.  (A repartitionByRange
         # here was measured a net loss.)
-        import os as _os
-
         from pyspark.sql import Observation
 
-        overpart = int(_os.environ.get("SPARK_GRAFT_OVERPARTITION", "4"))
-        nparts = max(4, overpart * spark.sparkContext.defaultParallelism)
+        # 4x overpartition of the occurrence shuffle: smaller per-task
+        # sorts + pipelined Arrow encode behind the shuffle (measured
+        # ~2x on the encode step vs 1x parallelism at 33M rows)
+        nparts = max(4, 4 * spark.sparkContext.defaultParallelism)
         # doc_part width sizes from the ID RANGE (dense ids: range ==
         # count; sparse caller-supplied ids: range >> count, and a
         # count-based width would write one near-empty directory per
@@ -1425,7 +1068,7 @@ class IndexBuilder:
             _, max_doc_id = check_doc_id_bounds(docs_t, docs_span)
 
         # stage: blocks (span-aligned, delta+varint, block-max meta).
-        # ONE shuffle: the raw occurrence stream range-partitions by
+        # ONE shuffle: the raw occurrence stream hash-partitions by
         # (field, term, span) and sorts; the encoder collapses sorted
         # duplicate runs into tf — no separate groupBy shuffle and no
         # tf intermediate table.
@@ -1444,11 +1087,8 @@ class IndexBuilder:
             # columns likewise cast to canonical term strings
             docs_in = apply_date_fields(docs_in, self.date_fields)
             docs_in = apply_typed_fields(docs_in, self.typed_fields)
-            exact_all = self.exact_fields + [
-                f
-                for f in list(self.date_fields) + list(self.typed_fields)
-                if f not in self.exact_fields
-            ]
+            fields = index_fields(m["params"])
+            exact_all = fields[len(self.analyzed_fields):]
             # range boundaries for the bucketed block layout: one
             # cheap sampled job; persisted in the manifest so every
             # query computes the identical bucket driver-side
@@ -1458,210 +1098,63 @@ class IndexBuilder:
             )
             m["params"]["bucket_boundaries"] = boundaries
             bucket_of = lambda c: term_bucket_expr(c, boundaries)  # noqa: E731
-            # Shuffle-row shrink: field rides as a byte code, span_id
-            # is an exchange-only expression (recomputed from doc_id
-            # post-shuffle), and the top-n_hot terms (by a sampled
-            # occurrence count — Zipf makes them cover most rows)
-            # shuffle as a 4-byte dictionary code with the string
-            # nulled out.  The rare-term tail keeps its strings, so
-            # no full-vocabulary map is ever built: at 10^12 turns
-            # the vocabulary is billions strong but the dictionary
-            # stays 64 K entries.  ~40% fewer shuffle/sort bytes per
-            # row and int sort keys for the hot majority.
-            fields = self.analyzed_fields + exact_all
-            if len(fields) > 127:
-                # fid is a tinyint: code 128 would wrap negative and
-                # numpy fancy-indexing would silently attribute
-                # postings to the wrong field
-                raise ValueError(
-                    f"{len(fields)} indexed fields exceeds the "
-                    "127-field limit of the byte field-code shuffle"
-                )
-            field_codes = {f: i for i, f in enumerate(fields)}
-            vocab: list[str] = (
-                hot_terms(
-                    docs_in, self.analyzed_fields, exact_all,
-                    n_rows, n_hot=self.n_hot,
-                )
-                if self.hot_dict_min_rows is not None
-                and n_rows >= self.hot_dict_min_rows
-                else []
-            )
+            # Shuffle-row shrink: field rides as a byte code and
+            # span_id is an exchange-only expression (recomputed from
+            # doc_id post-shuffle).
             occ = _occurrence_stream(
                 docs_in, self.analyzed_fields, exact_all,
-                include_whole=False, field_codes=field_codes,
+                include_whole=False,
+                field_codes={f: i for i, f in enumerate(fields)},
             )
+            # doc_id and dl pack into one int64 when doc lengths fit
+            # DL_BITS (measured, not assumed) — one less column
+            # through shuffle + Arrow; packed is monotonic in doc_id
+            # so sorting by it IS the doc order.  The packed path
+            # needs BOTH halves to fit: dl in DL_BITS and doc_id in
+            # the remaining 63-DL_BITS bits.
+            dl_bits = (
+                DL_BITS
+                if max_dl < (1 << DL_BITS)
+                and max_doc_id < (1 << (63 - DL_BITS))
+                else None
+            )
+            if dl_bits is not None:
+                stream = occ.select(
+                    "fid",
+                    "term",
+                    (
+                        F.col("doc_id") * F.lit(1 << dl_bits) + F.col("dl")
+                    ).alias("packed"),
+                )
+                # integer division for the exchange key: double
+                # division loses integer precision past 2^53, so
+                # doc_ids above ~2^33 (well under the 8.8T-doc
+                # target) could misround near span boundaries and
+                # fragment a (term, span) group into duplicate
+                # blocks (readers stay correct — additive — but
+                # the layout degrades)
+                span_expr = F.expr(f"packed div {span * (1 << dl_bits)}")
+                sort_cols = ["fid", "term", "packed"]
+            else:
+                stream = occ
+                span_expr = F.expr(f"doc_id div {span}")
+                sort_cols = ["fid", "term", "doc_id"]
             # HASH partition by the block key, then sort within
             # partitions: gives the encoder co-located, contiguous
             # (field, term, span) groups WITHOUT repartitionByRange's
             # extra sampling pass (which re-runs tokenize+explode over
             # the whole corpus just to pick boundaries).  The span
             # component of the key keeps hot-term groups bounded (the
-            # skew salt).  4x overpartition: smaller per-task sorts +
-            # pipelined Arrow/Python encode behind the shuffle
-            # (measured ~2x on the encode step vs 1x parallelism at
-            # 33M rows).
-            blocks_conf: dict[str, str] = {}
-            if self.encoder == "grouped" and vocab:
-                # content is identical either way, but a user
-                # A/B-benchmarking the grouped boundary shape must
-                # know when another routing choice displaced it
-                import warnings
-
-                warnings.warn(
-                    "encoder='grouped' ignored: the hot-term shuffle "
-                    "dictionary engaged (hot_dict_min_rows) and uses "
-                    "the coded carry path",
-                    stacklevel=2,
-                )
-            if vocab:
-                hot_df = spark.createDataFrame(
-                    [(t, i) for i, t in enumerate(vocab)],
-                    "hterm string, tcode int",
-                )
-                coded = (
-                    occ.join(
-                        F.broadcast(hot_df),
-                        occ["term"] == hot_df["hterm"],
-                        "left",
-                    ).select(
-                        "fid",
-                        F.coalesce("tcode", F.lit(-1)).alias("tcode"),
-                        F.when(
-                            F.col("tcode").isNotNull(),
-                            F.lit(None).cast("string"),
-                        )
-                        .otherwise(F.col("term"))
-                        .alias("term"),
-                        "doc_id",
-                        "dl",
-                    )
-                )
-                arranged = (
-                    coded.repartition(
-                        nparts,
-                        F.col("fid"),
-                        F.col("tcode"),
-                        F.col("term"),
-                        F.expr(f"doc_id div {span}"),
-                    )
-                    .sortWithinPartitions("fid", "tcode", "term", "doc_id")
-                    .withColumn("part_id", F.spark_partition_id())
-                )
-                vocab_bc = spark.sparkContext.broadcast(vocab)
-                blocks = arranged.mapInPandas(
-                    coded_carry_encoder(
-                        avgdl=avgdl, span=span, fields=fields, vocab_bc=vocab_bc
-                    ),
-                    schema=BLOCK_SCHEMA,
-                )
-            else:
-                # default path: doc_id and dl pack into one int64
-                # when doc lengths fit DL_BITS (measured, not
-                # assumed) — one less column through shuffle + Arrow;
-                # packed is monotonic in doc_id so sorting by it IS
-                # the doc order, and span_id derives from it as an
-                # exchange-only expression.  The Arrow encoder then
-                # processes batches with zero per-row Python objects.
-                # packed path needs BOTH halves to fit: dl in DL_BITS
-                # and doc_id in the remaining 63-DL_BITS bits
-                dl_bits = (
-                    DL_BITS
-                    if max_dl < (1 << DL_BITS)
-                    and max_doc_id < (1 << (63 - DL_BITS))
-                    else None
-                )
-                if dl_bits is not None and self.encoder == "grouped":
-                    # grouped (opt-in): ONE groupBy shuffle whose
-                    # map-side partial collect_list already merges a
-                    # task's occurrences per (fid, term, span) — the
-                    # term string crosses the wire and later the
-                    # Arrow boundary once per GROUP, not per
-                    # occurrence (~2.5× fewer boundary bytes), and no
-                    # JVM sort: the encoder lexsorts each group's
-                    # packed values (value order = doc order).  See
-                    # __init__ for why carry stays the default on
-                    # this box.  Shuffle-partition
-                    # override below mirrors the carry path's 4×
-                    # overpartition (pipelined encode); AQE partition
-                    # coalescing is suspended for this one action so
-                    # the post-shuffle encode keeps full parallelism
-                    # (the default 64 MB advisory size would coalesce
-                    # the ~50× compressed aggregate output to a
-                    # handful of tasks).
-                    grouped = (
-                        occ.select(
-                            "fid",
-                            "term",
-                            (
-                                F.col("doc_id") * F.lit(1 << dl_bits)
-                                + F.col("dl")
-                            ).alias("packed"),
-                        )
-                        # integer div: double division loses integer
-                        # precision past 2^53 (same note as the carry
-                        # path's exchange key)
-                        .withColumn(
-                            "span_id",
-                            F.expr(f"packed div {span * (1 << dl_bits)}"),
-                        )
-                        .groupBy("fid", "term", "span_id")
-                        .agg(F.collect_list("packed").alias("packed"))
-                    )
-                    blocks = grouped.mapInArrow(
-                        arrow_grouped_encoder(
-                            avgdl=avgdl, span=span, fields=fields,
-                            dl_bits=dl_bits,
-                        ),
-                        schema=BLOCK_SCHEMA,
-                    )
-                    blocks_conf = {
-                        "spark.sql.shuffle.partitions": str(nparts),
-                        "spark.sql.adaptive.coalescePartitions.enabled": "false",
-                    }
-                else:
-                    if self.encoder == "grouped":
-                        # only reachable when dl_bits is None (doc_id
-                        # or dl too wide to pack) — grouped requires
-                        # the packed column
-                        import warnings
-
-                        warnings.warn(
-                            "encoder='grouped' ignored: doc lengths or "
-                            "doc_ids exceed the packed-int64 budget; "
-                            "using the carry encoder",
-                            stacklevel=2,
-                        )
-                    if dl_bits is not None:
-                        stream = occ.select(
-                            "fid",
-                            "term",
-                            (
-                                F.col("doc_id") * F.lit(1 << dl_bits) + F.col("dl")
-                            ).alias("packed"),
-                        )
-                        # integer division for the exchange key: double
-                        # division loses integer precision past 2^53, so
-                        # doc_ids above ~2^33 (well under the 8.8T-doc
-                        # target) could misround near span boundaries and
-                        # fragment a (term, span) group into duplicate
-                        # blocks (readers stay correct — additive — but
-                        # the layout degrades)
-                        span_expr = F.expr(f"packed div {span * (1 << dl_bits)}")
-                        sort_cols = ["fid", "term", "packed"]
-                    else:
-                        stream = occ
-                        span_expr = F.expr(f"doc_id div {span}")
-                        sort_cols = ["fid", "term", "doc_id"]
-                    arranged = stream.repartition(
-                        nparts, F.col("fid"), F.col("term"), span_expr
-                    ).sortWithinPartitions(*sort_cols)
-                    blocks = arranged.mapInArrow(
-                        arrow_carry_encoder(
-                            avgdl=avgdl, span=span, fields=fields, dl_bits=dl_bits
-                        ),
-                        schema=BLOCK_SCHEMA,
-                    )
+            # skew salt).
+            arranged = stream.repartition(
+                nparts, F.col("fid"), F.col("term"), span_expr
+            ).sortWithinPartitions(*sort_cols)
+            blocks = arranged.mapInArrow(
+                arrow_carry_encoder(
+                    avgdl=avgdl, span=span, fields=fields, dl_bits=dl_bits
+                ),
+                schema=BLOCK_SCHEMA,
+            )
             # whole-string extra terms (index.go:546-553) bypass the
             # occurrence shuffle entirely: they are ~100 B each (half
             # the shuffle bytes) and a doc indexes its whole string
@@ -1688,26 +1181,16 @@ class IndexBuilder:
             # footer-min/max pruning — and each file stays
             # (field, term, span)-sorted for row-group pruning
             # inside the bucket.
-            prev_conf = {k: spark.conf.get(k, None) for k in blocks_conf}
-            for k, v in blocks_conf.items():
-                spark.conf.set(k, v)
-            try:
-                (
-                    blocks.unionByName(ws)
-                    .withColumn("bucket", bucket_of(F.col("term")))
-                    .repartition(max(self.n_buckets, 1), "bucket")
-                    .sortWithinPartitions("field", "term", "span_id")
-                    .write.mode("overwrite")
-                    .option("parquet.block.size", 8 * 1024 * 1024)
-                    .partitionBy("bucket")
-                    .parquet(self.path("blocks"))
-                )
-            finally:
-                for k, v in prev_conf.items():
-                    if v is None:
-                        spark.conf.unset(k)
-                    else:
-                        spark.conf.set(k, v)
+            (
+                blocks.unionByName(ws)
+                .withColumn("bucket", bucket_of(F.col("term")))
+                .repartition(max(self.n_buckets, 1), "bucket")
+                .sortWithinPartitions("field", "term", "span_id")
+                .write.mode("overwrite")
+                .option("parquet.block.size", 8 * 1024 * 1024)
+                .partitionBy("bucket")
+                .parquet(self.path("blocks"))
+            )
             self._mark_stage(m, "blocks", fp)
         if stop("blocks"):
             return

@@ -320,12 +320,14 @@ def near_docs(
     engine extension): docs where ``term_a`` occurs within
     ``max_dist`` tokens of ``term_b``, positions counted in the
     non-empty token stream.  ``max_dist=1`` means adjacent (either
-    order); equal terms need two distinct occurrences.  Same
-    row-local single-scan shape as the other boolean ops."""
+    order); equal terms need two distinct occurrences.  Terms are
+    lowercased like the analyzed tokens they match.  Same row-local
+    single-scan shape as the other boolean ops."""
     if max_dist < 1:
         raise ValueError("near_docs needs max_dist >= 1")
+    pred = _near_pred(F.col(field), term_a.lower(), term_b.lower(), max_dist)
     return (
-        docs.where(_near_pred(F.col(field), term_a, term_b, max_dist))
+        docs.where(pred)
         .select("doc_id")
         .orderBy("doc_id")
     )

@@ -306,7 +306,13 @@ def rebuild_touched_buckets(
     (carried-blocks-in-bucket ∪ re-encoded groups); every other
     bucket directory of blocks/ and terms/ is never read or written.
     Returns (swap pairs, touched bucket list)."""
-    from .build import BLOCK_SCHEMA, carry_encoder, term_bucket_expr
+    from .build import (
+        BLOCK_SCHEMA,
+        arrow_carry_encoder,
+        field_code_col,
+        index_fields,
+        term_bucket_expr,
+    )
 
     # callers that already collected the distinct buckets pass them
     # in — recollecting here would cost a redundant Spark job
@@ -325,14 +331,22 @@ def rebuild_touched_buckets(
     keys = affected.select("field", "term", "span_id")
     carried = bl_t.join(keys, ["field", "term", "span_id"], "left_anti")
 
+    # same arrangement and encoder as the build's blocks stage, over
+    # pre-aggregated (tf-carrying) unpacked rows
+    fields = index_fields(_load_manifest(index_dir)["params"])
     nparts = max(4, spark.sparkContext.defaultParallelism)
     arranged = (
-        surviving_tf.repartitionByRange(nparts, "field", "term", "span_id")
-        .sortWithinPartitions("field", "term", "span_id", "doc_id")
-        .withColumn("part_id", F.spark_partition_id())
+        surviving_tf.select(
+            field_code_col(F.col("field"), fields),
+            "term", "doc_id", "dl", "tf", "span_id",
+        )
+        .repartition(nparts, "fid", "term", "span_id")
+        .sortWithinPartitions("fid", "term", "doc_id")
+        .drop("span_id")
     )
-    rebuilt = arranged.mapInPandas(
-        carry_encoder(avgdl=avgdl, span=span), schema=BLOCK_SCHEMA
+    rebuilt = arranged.mapInArrow(
+        arrow_carry_encoder(avgdl=avgdl, span=span, fields=fields, dl_bits=None),
+        schema=BLOCK_SCHEMA,
     ).withColumn("bucket", term_bucket_expr(F.col("term"), boundaries))
 
     blocks_tmp = os.path.join(index_dir, "blocks") + "_tmp"
@@ -470,7 +484,6 @@ def _delete_docs_locked(
         )
     docs_span = int(p["docs_span"])
     analyzed_fields = list(p["analyzed_fields"])
-    exact_fields = list(p["exact_fields"])
 
     ids = ids.select(F.col("doc_id").cast("long")).distinct()
 
@@ -491,13 +504,11 @@ def _delete_docs_locked(
     # own content — O(d · terms/doc), no index probe.  Date-metadata
     # fields re-parse exactly like the build did so their epoch terms
     # match.
-    from .build import apply_date_fields, apply_typed_fields
+    from .build import apply_date_fields, apply_typed_fields, index_fields
 
     date_fields = p.get("date_fields") or {}
     typed_fields = p.get("typed_fields") or {}
-    exact_all = exact_fields + [
-        f for f in list(date_fields) + list(typed_fields) if f not in exact_fields
-    ]
+    exact_all = index_fields(p)[len(analyzed_fields):]
     occ = _occurrence_stream(
         apply_typed_fields(apply_date_fields(deleted_docs, date_fields), typed_fields),
         analyzed_fields,
@@ -818,6 +829,7 @@ def _upsert_docs_locked(
         apply_typed_fields,
         check_doc_id_bounds,
         doc_len_col,
+        index_fields,
         term_bucket_expr,
     )
 
@@ -834,12 +846,9 @@ def _upsert_docs_locked(
         )
     docs_span = int(p["docs_span"])
     analyzed_fields = list(p["analyzed_fields"])
-    exact_fields = list(p["exact_fields"])
     date_fields = p.get("date_fields") or {}
     typed_fields = p.get("typed_fields") or {}
-    exact_all = exact_fields + [
-        f for f in list(date_fields) + list(typed_fields) if f not in exact_fields
-    ]
+    exact_all = index_fields(p)[len(analyzed_fields):]
 
     new_docs = new_docs.withColumn("doc_id", F.col("doc_id").cast("long"))
     from .build import primary_dl_col

@@ -112,8 +112,7 @@ def minhash_signatures(
     hashes suffice for the family).  h2's 44-bit width keeps
     ``h1 + i*h2`` inside int64 for i ≤ ~2000 (no ANSI overflow).
 
-    Two measured plan shapes, identical output (A/B'd like the
-    hot-term dictionary and the grouped block encoder):
+    Two measured plan shapes, identical output:
 
     - ``shape="grouped"`` (default): explode → distinct →
       groupBy(doc_id) with n_hashes min aggregates.  Two exchanges,

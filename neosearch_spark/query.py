@@ -483,13 +483,14 @@ class SparkIndex:
         text with the same row-local predicate as
         :func:`fts.near_docs` — so the text scan touches the AND
         selectivity, not the corpus.  Equal terms need two distinct
-        occurrences.  Same doc-store visibility note as
-        ``phrase_docs``."""
+        occurrences; terms are lowercased like ``phrase_docs``.  Same
+        doc-store visibility note as ``phrase_docs``."""
         if max_dist < 1:
             raise ValueError("near_docs needs max_dist >= 1")
         self._require_analyzed(field, "near_docs")
         from .fts import _near_pred
 
+        term_a, term_b = term_a.lower(), term_b.lower()
         cand = self.and_docs(list(dict.fromkeys([term_a, term_b])), field)
         return (
             self.docs.join(cand, "doc_id")
@@ -533,10 +534,11 @@ class SparkIndex:
         table, so NO posting or corpus scan runs — the whole query
         is a length-pruned scan of the vocabulary.  Whole-string
         extra terms are excluded for analyzed fields (same rule as
-        ``top_terms``)."""
+        ``top_terms``), and so is the empty token that runs of spaces
+        index (same rule as :func:`fts.suggest_terms`)."""
         if max_dist < 1:
             raise ValueError("suggest_terms needs max_dist >= 1")
-        t = self.terms.where(F.col("field") == field)
+        t = self.terms.where((F.col("field") == field) & (F.col("term") != ""))
         if field in self.manifest["params"].get("analyzed_fields", []):
             t = t.where(~F.col("term").contains(" "))
         dist = F.levenshtein(F.col("term"), F.lit(term))

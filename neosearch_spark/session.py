@@ -28,10 +28,9 @@ def get_spark(
     ``spark.local.dir`` stays at the platform default (disk-backed)
     so shuffle spill actually relieves memory pressure.  The
     benchmark harnesses opt into tmpfs scratch explicitly (see
-    bench.py / tools/scaling_bench.py: on this single-box sandbox the
-    one shared virtio disk would otherwise measure the disk, not the
-    engine — a real cluster's node-local scratch scales with node
-    count).  $SPARK_GRAFT_LOCAL_DIR overrides either way.
+    tools/scaling_bench.py: on a single box the one shared disk
+    would otherwise measure the disk, not the engine — a real
+    cluster's node-local scratch scales with node count).  $SPARK_GRAFT_LOCAL_DIR overrides either way.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -57,7 +56,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # default 10k-row Arrow batches add ~4x overhead to the
-        # mapInPandas block encoder; 512k rows ≈ 25-50 MB per batch
+        # mapInArrow block encoder; 512k rows ≈ 25-50 MB per batch
         # per core — well within executor memory at 32 cores
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "524288")
         .config("spark.python.worker.reuse", "true")

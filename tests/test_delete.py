@@ -14,6 +14,8 @@ from neosearch_spark.oracle import OracleIndex
 from neosearch_spark.query import SparkIndex
 from neosearch_spark.synth import synth_transcripts
 
+from test_index_golden import assert_block_invariants
+
 N_TURNS = 500
 
 
@@ -245,6 +247,8 @@ def test_delete_equals_fresh_rebuild_logically(spark, tmp_path):
     b = SparkIndex(spark, d_fresh)
     assert a.n_docs == b.n_docs
     assert abs(a.avgdl - b.avgdl) < 1e-12
+    # blocks rewritten by maintenance carry valid block-max metadata
+    assert_block_invariants(a.blocks.collect(), a.span)
 
 
 def test_writer_lock_excludes_concurrent_and_steals_stale(spark, tmp_path):

@@ -7,7 +7,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from neosearch_spark.build import IndexBuilder, logical_postings
+from neosearch_spark.build import B, K1, IndexBuilder, logical_postings
 from neosearch_spark.codec import decode_postings, decode_tfs
 from neosearch_spark.query import SparkIndex
 
@@ -38,17 +38,30 @@ def test_or_union_semantics(built):
     assert [r["doc_id"] for r in built.or_docs(["neoway", "google"]).collect()] == [1, 2, 4]
 
 
-def test_postings_sorted_unique_invariant(built):
-    # MergeSet invariant: store/utils.go:39-93; ordering golden
-    # store/test/store.go:255-301 (insert 0,2,1 -> read 0,1,2)
-    for row in built.blocks.collect():
+def assert_block_invariants(rows, span: int) -> None:
+    """Per-block invariants of every encoder output: postings sorted
+    unique, block metadata (n_docs, first_doc, span_id) matching the
+    postings, and the block-max bounds (max_tf, max_tf_norm) equal to
+    the maxima recomputed from the decoded tfs and dls."""
+    for row in rows:
         ids = decode_postings(row["docs_enc"])
         assert np.all(np.diff(ids) > 0), row["term"]  # strictly ascending = sorted unique
         assert len(ids) == row["n_docs"]
         assert ids[0] == row["first_doc"]
-        assert (ids // built.span == row["span_id"]).all()
-        tfs = decode_tfs(row["tfs_enc"])
+        assert (ids // span == row["span_id"]).all()
+        tfs = decode_tfs(row["tfs_enc"]).astype(np.float64)
+        dls = decode_tfs(row["dls_enc"]).astype(np.float64)  # same varint format
         assert row["max_tf"] == tfs.max()
+        norm = tfs * (K1 + 1.0) / (
+            tfs + K1 * (1.0 - B + B * dls / row["enc_avgdl"])
+        )
+        assert row["max_tf_norm"] == pytest.approx(norm.max(), rel=1e-12), row["term"]
+
+
+def test_postings_sorted_unique_invariant(built):
+    # MergeSet invariant: store/utils.go:39-93; ordering golden
+    # store/test/store.go:255-301 (insert 0,2,1 -> read 0,1,2)
+    assert_block_invariants(built.blocks.collect(), built.span)
 
 
 def test_block_payload_tf(built, tiny_oracle):
@@ -71,99 +84,3 @@ def test_logical_postings_match_blocks(spark, tiny_docs, built, tiny_oracle):
 def test_stats(built, tiny_oracle):
     assert built.n_docs == tiny_oracle.n_docs
     assert abs(built.avgdl - tiny_oracle.avgdl) < 1e-12
-
-
-def test_hot_term_dict_content_invariant(spark, tmp_path):
-    """The hot-term shuffle dictionary affects only routing/bytes —
-    index content must be byte-identical with and without it (and
-    therefore for any sampled dictionary, e.g. at other parallelism
-    levels)."""
-    from pyspark.sql import functions as F
-
-    from neosearch_spark.docids import assign_doc_ids
-    from neosearch_spark.synth import synth_transcripts
-
-    docs = assign_doc_ids(synth_transcripts(spark, 800, seed=13))
-
-    def sig(d):
-        return (
-            spark.read.parquet(str(d) + "/blocks")
-            .select(
-                F.md5(
-                    F.concat_ws(
-                        "|", "field", "term", "span_id",
-                        F.base64("docs_enc"), F.base64("tfs_enc"),
-                        F.base64("dls_enc"),
-                    )
-                ).alias("h")
-            )
-            .agg(
-                F.sum(
-                    F.conv(F.substring("h", 1, 15), 16, 10).cast("decimal(38,0)")
-                ).alias("s")
-            )
-            .collect()[0]["s"]
-        )
-
-    a, b = tmp_path / "nodict", tmp_path / "dict"
-    IndexBuilder(str(a), span=64, exact_fields=["role", "tool"]).build(docs)
-    IndexBuilder(
-        str(b), span=64, exact_fields=["role", "tool"],
-        hot_dict_min_rows=0, n_hot=37,
-    ).build(docs)
-    assert sig(a) == sig(b)
-
-
-def test_grouped_encoder_byte_identical_to_carry(spark, tmp_path):
-    """The grouped (collect_list + numpy lexsort) encoder — the r4
-    scaling-efficiency default — must produce byte-identical blocks
-    to the per-occurrence repartition+sort carry encoder, INCLUDING
-    the derived block metadata (n_docs, first_doc, max_tf,
-    max_tf_norm): same postings, same tf collapse, same block-max
-    bounds, at any shuffle arrival order."""
-    from pyspark.sql import functions as F
-
-    from neosearch_spark.docids import assign_doc_ids
-    from neosearch_spark.synth import synth_transcripts
-
-    docs = assign_doc_ids(synth_transcripts(spark, 800, seed=17))
-
-    def sig(d):
-        return (
-            spark.read.parquet(str(d) + "/blocks")
-            .select(
-                F.md5(
-                    F.concat_ws(
-                        "|", "field", "term", "span_id",
-                        F.col("first_doc").cast("string"),
-                        F.col("n_docs").cast("string"),
-                        F.base64("docs_enc"), F.base64("tfs_enc"),
-                        F.base64("dls_enc"),
-                        F.format_number("max_tf", 6),
-                        F.format_number("max_tf_norm", 6),
-                    )
-                ).alias("h")
-            )
-            .agg(
-                F.sum(
-                    F.conv(F.substring("h", 1, 15), 16, 10).cast("decimal(38,0)")
-                ).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .collect()[0]
-        )
-
-    a, b = tmp_path / "grouped", tmp_path / "carry"
-    IndexBuilder(
-        str(a), span=64, exact_fields=["role", "tool"], encoder="grouped"
-    ).build(docs)
-    IndexBuilder(
-        str(b), span=64, exact_fields=["role", "tool"], encoder="carry"
-    ).build(docs)
-    sa, sb = sig(a), sig(b)
-    assert sa["n"] == sb["n"] and sa["s"] == sb["s"]
-
-
-def test_unknown_encoder_rejected(tmp_path):
-    with pytest.raises(ValueError, match="unknown encoder"):
-        IndexBuilder(str(tmp_path), encoder="gropued")

@@ -145,6 +145,15 @@ def test_near_docs_index_equals_direct(corpus):
         assert set(got_idx) <= and_ids, (a, b, d)
     # adjacency: "neoway business" is adjacent in the edge text
     assert si.near_docs("neoway", "business", max_dist=1).count() > 0
+    # query-side normalization (as in phrase_docs): mixed-case terms
+    # match the lowercase analyzed tokens on both paths
+    lower = [r["doc_id"] for r in si.near_docs("tok1", "tok2", max_dist=8).collect()]
+    assert lower
+    for a, b in [("TOK1", "Tok2"), ("tok1", "TOK2")]:
+        assert [r["doc_id"]
+                for r in si.near_docs(a, b, max_dist=8).collect()] == lower, (a, b)
+        assert [r["doc_id"]
+                for r in fts.near_docs(docs, a, b, max_dist=8).collect()] == lower, (a, b)
     with pytest.raises(ValueError, match="max_dist"):
         si.near_docs("tok1", "tok2", max_dist=0)
 
@@ -733,13 +742,16 @@ def test_suggest_terms_index_equals_direct(corpus):
     corpus scan) ≡ the direct token-df aggregation, including the
     (dist asc, df desc, term asc) ranking; max_dist validated."""
     si, _, docs = corpus
+    # short terms (len <= max_dist) reach the empty token that the
+    # corpus's multi-space runs index; it is never a suggestion
     for term, d, n in [("tok", 2, 5), ("neoway", 2, 5), ("tok10", 1, 8),
-                       ("zzqqxx", 2, 5)]:
+                       ("zzqqxx", 2, 5), ("a", 1, 5), ("zq", 2, 5)]:
         got_idx = [(r["term"], r["dist"], r["df"])
                    for r in si.suggest_terms(term, max_dist=d, n=n).collect()]
         got_dir = [(r["term"], r["dist"], r["df"])
                    for r in fts.suggest_terms(docs, term, max_dist=d, n=n).collect()]
         assert got_idx == got_dir, (term, d)
+        assert "" not in [t for t, _, _ in got_idx], (term, d)
         # ranking invariant: dist non-decreasing; within a dist, df
         # non-increasing
         for a, b in zip(got_idx, got_idx[1:]):

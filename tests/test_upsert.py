@@ -21,6 +21,7 @@ from neosearch_spark.query import SparkIndex
 from neosearch_spark.synth import synth_transcripts
 
 from test_delete import _dir_file_hashes
+from test_index_golden import assert_block_invariants
 
 
 def _logical(spark, d):
@@ -69,6 +70,8 @@ def test_upsert_equals_fresh_rebuild_logically(spark, tmp_path):
     a, b = SparkIndex(spark, d_up), SparkIndex(spark, d_fresh)
     assert a.n_docs == b.n_docs == n + 3
     assert abs(a.avgdl - b.avgdl) < 1e-12
+    # blocks rewritten by maintenance carry valid block-max metadata
+    assert_block_invariants(a.blocks.collect(), a.span)
 
 
 def test_upsert_matches_oracle_queries(spark, tmp_path):
@@ -514,3 +517,29 @@ def test_upsert_and_delta_reject_pathological_doc_ids(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="NULL doc_id"):
         delta_sink(nullid, 0, d, ["text"])
+
+
+def test_rebuild_rejects_field_outside_manifest(spark, tmp_path):
+    """The maintenance rewrite codes each posting's field by its
+    position in the manifest's field list; a field missing from that
+    list must fail the rewrite, never be filed under another field."""
+    import json
+
+    from neosearch_spark.maintenance import rebuild_touched_buckets
+
+    docs = assign_doc_ids(synth_transcripts(spark, 40, seed=3))
+    d = str(tmp_path / "idx")
+    IndexBuilder(d, span=32).build(docs)
+    with open(d + "/manifest.json") as f:
+        boundaries = json.load(f)["params"]["bucket_boundaries"]
+    stream = spark.createDataFrame(
+        [("nosuchfield", "tok1", 1, 1, 5, 0)],
+        "field string, term string, doc_id long, tf long, dl long, span_id long",
+    )
+    affected = stream.select("field", "term", "span_id").withColumn(
+        "bucket", F.lit(0)
+    )
+    with pytest.raises(Exception, match="nosuchfield"):
+        rebuild_touched_buckets(
+            spark, d, affected, stream, 5.0, 32, boundaries, bucket_list=[0]
+        )

@@ -13,8 +13,8 @@ uint64s — the bounds guard admits them at the default span), so
 ``get``-by-id parity holds; both string fields are analyzed.
 
 Usage: python3 tools/refcorpus_bench.py [--cores N] [--out json]
-Prints one JSON line with build/query timings (min-of-2, same
-protocol as bench.py).
+Prints one JSON line with build/query timings (min-of-``--runs``
+wall times, default 2).
 """
 
 from __future__ import annotations
@@ -89,7 +89,7 @@ def main() -> None:
 
     q: dict[str, float] = {}
     hot, mid = picks["company_name"]
-    # warm the handle/memo once (serving model, like bench.py)
+    # warm the handle/memo once (serving model: queries hit a warm handle)
     si.term_docs(hot, field="company_name").collect()
     q["term_get_hot"] = t_best(
         lambda: si.term_docs(hot, field="company_name").collect()

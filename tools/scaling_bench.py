@@ -159,29 +159,13 @@ calib_scan_sec = time.time() - t0
 # leg C: leg B + an identity Arrow round-trip (JVM -> Arrow ->
 # Python -> Arrow -> JVM at full data volume, no numpy work) — the
 # marginal cost of the Python boundary at PER-OCCURRENCE volume
-# (the pre-r4 encoder's shape)
+# (the block encoder's shape)
 occ = occ_shape()
 t0 = time.time()
 occ.mapInArrow(lambda it: it, schema=occ.schema).write.format(
     "noop"
 ).mode("overwrite").save()
 calib_arrow_sec = time.time() - t0
-
-# leg D: the r4 OPT-IN grouped boundary shape (encoder="grouped";
-# build.py ships encoder="carry" as the default — grouped is slower
-# at low core counts) — map-side-combined groupBy(fid, term, span)
-# collect_list, then the identity Arrow round-trip over the GROUPED
-# rows (term strings cross once per group; ~2.5x fewer boundary
-# bytes than leg C)
-g = (occ.withColumn("packed", F.expr("doc_id * 1024 + dl"))
-     .withColumn("span_id", F.expr("packed div " + str(131072 * 1024)))
-     .groupBy("fid", "term", "span_id")
-     .agg(F.collect_list("packed").alias("packed")))
-t0 = time.time()
-g.mapInArrow(lambda it: it, schema=g.schema).write.format(
-    "noop"
-).mode("overwrite").save()
-calib_grouped_sec = time.time() - t0
 
 si = SparkIndex(spark, idx, cache=True)
 qs = ["tok1 tok3 tok17", "tok2 tok9 tok100 tok5000", "tok1"]
@@ -217,8 +201,7 @@ json.dump({{"cores": cores, "n_turns": n_turns,
            "batch_query_sec": batch_query_sec,
            "turns_per_sec": n_turns / build_sec, "sig": str(sig),
            "calib_sec": calib_sec, "calib_scan_sec": calib_scan_sec,
-           "calib_arrow_sec": calib_arrow_sec,
-           "calib_grouped_sec": calib_grouped_sec, "stage_sec": stage_sec,
+           "calib_arrow_sec": calib_arrow_sec, "stage_sec": stage_sec,
            "steal_avg": round(statistics.mean(steal), 2) if steal else 0.0,
            "steal_max": round(max(steal), 2) if steal else 0.0,
            "results": res}}, open(out, "w"))
@@ -302,20 +285,6 @@ def main() -> None:
     calib_lo, calib_hi, calib_eff = leg_eff("calib_sec")
     scan_lo, scan_hi, scan_eff = leg_eff("calib_scan_sec")
     arrow_lo, arrow_hi, arrow_eff = leg_eff("calib_arrow_sec")
-    # leg D exists only in trials recorded after the r4 grouped
-    # encoder landed (replay of older banks skips the row)
-    has_grouped = all(
-        "calib_grouped_sec" in r for r in lo_runs + hi_runs
-    )
-    if has_grouped:
-        grp_lo, grp_hi, grp_eff = leg_eff("calib_grouped_sec")
-        grouped_row = (
-            f"| grouped agg + identity Arrow (r4 opt-in grouped shape, "
-            f"encoder=\"grouped\"; shipped default is carry) "
-            f"| {grp_lo:.1f} | {grp_hi:.1f} | {grp_eff:.2f} |\n"
-        )
-    else:
-        grouped_row = ""
 
     stage_rows = []
     for s in lo["stage_sec"]:
@@ -500,8 +469,8 @@ time per level, efficiency = (sec@{lo_n} ÷ sec@{hi_n}) ÷ {ratio:.0f}:
 |---|---|---|---|
 | pure-JVM shuffle+sort (30M rows, no Python) | {calib_lo:.1f} | {calib_hi:.1f} | {calib_eff:.2f} |
 | parquet scan + tokenize + explode (JVM only) | {scan_lo:.1f} | {scan_hi:.1f} | {scan_eff:.2f} |
-| + identity Arrow round-trip (pre-r4 per-occurrence boundary) | {arrow_lo:.1f} | {arrow_hi:.1f} | {arrow_eff:.2f} |
-{grouped_row}| full build (all stages + table writes) | {lo['build_sec']:.1f} | {hi['build_sec']:.1f} | {eff:.2f} |
+| + identity Arrow round-trip (per-occurrence boundary, the encoder's shape) | {arrow_lo:.1f} | {arrow_hi:.1f} | {arrow_eff:.2f} |
+| full build (all stages + table writes) | {lo['build_sec']:.1f} | {hi['build_sec']:.1f} | {eff:.2f} |
 
 (Caveat on the stripped legs: at the 4N level they finish in a few
 seconds, so fixed per-job constants — scheduling, JIT, the first
@@ -593,11 +562,6 @@ ids (100.7 s build) until the width was derived from the id RANGE
                     "shuffle_sort": round(calib_eff, 3),
                     "scan_tokenize": round(scan_eff, 3),
                     "arrow_boundary": round(arrow_eff, 3),
-                    **(
-                        {"grouped_boundary": round(grp_eff, 3)}
-                        if has_grouped
-                        else {}
-                    ),
                 },
                 "batch_query_speedup": round(bq_speedup, 2),
             }
