@@ -265,7 +265,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["idx_prefix"] = lambda s, d: _doc_index(s, d).prefix_docs("vec")
     q["idx_exact_field"] = lambda s, d: _doc_index(s, d).term_docs("fr", field="lang")
     q["idx_bm25_topk"] = lambda s, d: _doc_index(s, d).bm25_topk(
-        " ".join(BM25_Q), k=10, prune=True
+        " ".join(BM25_Q), k=10
     ).withColumn("score", F.round(F.col("score"), 6))
     # batch multi-query serving path: 3 queries, ONE pushed-down scan
     q["idx_bm25_batch"] = lambda s, d: _doc_index(s, d).bm25_topk_batch(

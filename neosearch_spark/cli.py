@@ -289,9 +289,7 @@ def cmd_search(args) -> int:
         ]
         print(json.dumps({"batch": out}))
         return 0
-    top = idx.bm25_topk(
-        args.query[0], k=args.k, field=args.field, prune=not args.no_prune
-    ).collect()
+    top = idx.bm25_topk(args.query[0], k=args.k, field=args.field).collect()
     print(
         json.dumps(
             {
@@ -763,7 +761,6 @@ def main(argv: list[str] | None = None) -> int:
                    help="analyzed field to score; defaults to the "
                         "index's primary analyzed field (BM25 doc "
                         "length still comes from the primary field)")
-    s.add_argument("--no-prune", action="store_true")
     s.add_argument("--dry-run", action="store_true",
                    help="print planned stages + block-scan plan without executing")
     s.set_defaults(fn=cmd_search)

@@ -233,9 +233,10 @@ def phrase_docs(docs: DataFrame, phrase: str, field: str = "text") -> DataFrame:
 def wildcard_to_like(pattern: str) -> str:
     """Glob wildcard → SQL LIKE pattern: ``*`` → ``%``, ``?`` → ``_``,
     with LIKE metacharacters (``%``, ``_``, ``\\``) in the input
-    escaped by backslash — the default escape character in BOTH
-    Spark SQL and DuckDB, so one translated pattern serves the
-    engine and the oracle."""
+    escaped by backslash — Spark SQL's default LIKE escape.  DuckDB
+    has NO default LIKE escape: an escaped pattern evaluated there
+    needs an explicit ``ESCAPE '\\'`` clause, or ``\\_`` matches
+    nothing."""
     out = []
     for ch in pattern:
         if ch in ("%", "_", "\\"):

@@ -11,16 +11,19 @@ Scale notes:
 - Query-term block fetch is a parquet scan with a pushed-down
   ``term`` predicate; block files are (term, span) sorted at build
   time so row-group min/max stats prune most of the scan.
-- BM25 scoring groups blocks by doc-span: every span scores
-  independently (one Arrow batch each, numpy inside), emits ≤k
-  candidates, and only those tiny candidate sets hit the final
-  global top-k shuffle.
+- BM25 top-k has one scorer for one query or a batch
+  (``_topk_rows``): queries with a small posting volume are scored on
+  the driver from one pushed-down payload scan; hot queries group
+  blocks by doc-span: every span scores independently (one Arrow
+  batch each, numpy inside), emits ≤k candidates per query, and only
+  those candidate sets (cut to k per query distributed when many
+  spans are scored) reach the driver.
 - Block-max pruning: per-span upper bound = Σ_q idf·max_tf_norm of
-  that span's blocks (one groupBy); a bootstrap pass over the
-  highest-bound spans yields a threshold θ (a lower bound of the
-  true kth score), and spans with bound < θ are provably outside the
-  top-k — score-lossless, asserted against exhaustive scoring in
-  tests (SURVEY §4.2.3).
+  that span's blocks (from the memoized block metadata); a bootstrap
+  pass over the highest-bound spans yields a threshold θ (a lower
+  bound of the true kth score), and spans with bound < θ are provably
+  outside the top-k — score-lossless, asserted against exhaustive
+  scoring in tests (SURVEY §4.2.3).
 """
 
 from __future__ import annotations
@@ -33,7 +36,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .analyzer import analyze_query
@@ -445,10 +448,11 @@ class SparkIndex:
         (no driver collect, no broadcast of the candidate side —
         phrase terms can be hot); only docs holding ALL phrase
         tokens are re-read, so the text scan touches the AND
-        selectivity, not the corpus.  Like ``get_docs``, the confirm
-        reads the doc store: docs ingested through the streaming
-        delta path (postings but no doc-store row yet) are not
-        visible until compaction folds them in."""
+        selectivity, not the corpus.  A one-token phrase takes the
+        same confirm, so every phrase answers from the same rows.
+        Like ``get_docs``, the confirm reads the doc store: docs
+        ingested through the streaming delta path (postings but no
+        doc-store row) are not visible to it."""
         self._require_analyzed(field, "phrase_docs")
         norm = phrase.strip(" ").lower()
         if norm == "":
@@ -456,8 +460,6 @@ class SparkIndex:
         toks = [t for t in norm.split(" ") if t != ""]
         if not toks:
             raise ValueError("phrase_docs needs at least one non-empty token")
-        if len(norm.split(" ")) == 1:
-            return self.term_docs(toks[0], field)
         cand = self.and_docs(list(dict.fromkeys(toks)), field)
         padded = F.concat(
             F.lit(" "), F.lower(F.trim(F.col(field).cast("string"))), F.lit(" ")
@@ -601,12 +603,12 @@ class SparkIndex:
         ranked = sorted(
             cand, key=lambda t: (-(tf[t] * idf.get(t, 0.0)), t)
         )[: max(1, n_terms)]
-        res = self.bm25_topk(
-            " ".join(ranked), k=k + 1 if exclude_self else k, field=field
+        rows = self._cached_topk(
+            " ".join(ranked), k + 1 if exclude_self else k, field
         )
         if exclude_self:
-            res = res.where(F.col("doc_id") != int(doc_id)).limit(k)
-        return res
+            rows = [r for r in rows if r[0] != int(doc_id)][:k]
+        return self._topk_df(rows)
 
     def top_terms(self, n: int = 20, field: str = "text") -> DataFrame:
         """Vocabulary introspection: the ``n`` highest-df terms of a
@@ -710,18 +712,6 @@ class SparkIndex:
             have.update(fetched)
         return {t: have[t] for t in qterms}
 
-    def idfs(
-        self, qterms: list[str], field: str = "text"
-    ) -> tuple[dict[str, float], int, int]:
-        """Per-term idf plus the total block/posting counts for the
-        query terms (memoized terms-table metadata — drives the
-        local/distributed/prune path decision)."""
-        meta = self._term_meta(list(set(qterms)), field)
-        dfmap = {t: m[0] for t, m in meta.items()}
-        total_blocks = sum(m[1] for m in meta.values())
-        total_postings = sum(dfmap.values())
-        return self._idf(dfmap, qterms), total_blocks, total_postings
-
     # driver-memory bound for the span-metadata memo: stop caching
     # past this many total (span_id, max_tf_norm, enc_avgdl) tuples
     # (~100 MB); further new terms are fetched per-query uncached
@@ -780,86 +770,6 @@ class SparkIndex:
             have.update(fetched)
         return {t: have[t] for t in uniq}
 
-    def _score_spans(self, blocks: DataFrame, qterms: list[str], idf: dict, k: int) -> DataFrame:
-        """Per-span exact scoring: ≤k (doc_id, score) rows per span.
-
-        Accumulation order is per query term IN QUERY ORDER, blocks
-        by first_doc, postings in block order — ``np.add.at`` applies
-        additions sequentially in exactly that order, so the float64
-        op order (hence every score bit) matches the per-block loop
-        this replaces, the local path, and the pytest oracle.  All of
-        a span's block buffers are varint-decoded in ONE batch
-        (buffers self-delimit) and the per-block delta chains rebased
-        with one cumsum + repeat — same pattern as ``_decode``."""
-        from .codec import _varint_decode
-
-        span = self.span
-        avgdl = self.avgdl
-        qpos = {t: i for i, t in enumerate(qterms)}
-
-        def score(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            span_id = int(key[0])
-            base = span_id * span
-            acc = np.zeros(span, dtype=np.float64)
-            seen = np.zeros(span, dtype=bool)
-            # duplicate-term queries carry a per-OCCURRENCE _qp column
-            # (a dict map would collapse duplicates onto one position,
-            # diverging from the oracle's per-occurrence float order)
-            if "_qp" not in pdf.columns:
-                pdf = pdf.assign(_qp=pdf["term"].map(qpos))
-            pdf = pdf.sort_values(["_qp", "first_doc"], kind="mergesort")
-            n_docs = pdf["n_docs"].to_numpy(dtype=np.int64)
-            deltas = _varint_decode(b"".join(pdf["docs_enc"].tolist()))
-            cum = np.cumsum(deltas.astype(np.int64))
-            starts = np.concatenate(([0], np.cumsum(n_docs)[:-1]))
-            rebase = np.repeat(cum[starts] - deltas[starts].astype(np.int64), n_docs)
-            ids = cum - rebase
-            tfs = _varint_decode(b"".join(pdf["tfs_enc"].tolist())).astype(np.float64)
-            dls = _varint_decode(b"".join(pdf["dls_enc"].tolist())).astype(np.float64)
-            tf_norm = (tfs * (K1 + 1.0)) / (tfs + K1 * (1.0 - B + B * dls / avgdl))
-            w = np.repeat(pdf["term"].map(idf).to_numpy(dtype=np.float64), n_docs)
-            rel = ids - base
-            np.add.at(acc, rel, w * tf_norm)
-            seen[rel] = True
-            idx = np.flatnonzero(seen)
-            if idx.size == 0:
-                return pd.DataFrame({"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")})
-            sc = acc[idx]
-            order = np.lexsort((idx, -sc))[:k]
-            return pd.DataFrame({"doc_id": (idx[order] + base).astype(np.int64), "score": sc[order]})
-
-        # duplicate query terms score once per occurrence in the
-        # oracle; replicate blocks per duplicate occurrence, each
-        # replica tagged with ITS occurrence's query position so the
-        # accumulation order matches the oracle even for
-        # non-adjacent duplicates ('a b a')
-        occ_positions: dict[str, list[int]] = {}
-        for i, t in enumerate(qterms):
-            occ_positions.setdefault(t, []).append(i)
-        if any(len(ps) > 1 for ps in occ_positions.values()):
-            posmap = self.spark.createDataFrame(
-                [
-                    (t, r + 1, p)
-                    for t, ps in occ_positions.items()
-                    for r, p in enumerate(ps)
-                ],
-                "term string, _rep int, _qp int",
-            )
-            mult = self.spark.createDataFrame(
-                [(t, len(ps)) for t, ps in occ_positions.items()],
-                "term string, mult int",
-            )
-            blocks = (
-                blocks.join(F.broadcast(mult), "term")
-                .withColumn("_rep", F.explode(F.sequence(F.lit(1), F.col("mult"))))
-                .join(F.broadcast(posmap), ["term", "_rep"])
-                .drop("mult", "_rep")
-            )
-
-        return blocks.groupBy("span_id").applyInPandas(
-            score, schema="doc_id long, score double"
-        )
-
     # below this many total postings across the query's terms, the
     # compressed blocks are ≤ ~10 MB — fetch them with one pushed-down
     # scan (term-range file layout prunes to a few files) and score
@@ -870,40 +780,25 @@ class SparkIndex:
     # postings/query.
     LOCAL_SCORE_MAX_POSTINGS = 4_000_000
 
-    # cap on collected block-metadata rows per query (each row covers
-    # ≤ span postings, so the cap admits ~260 G postings at the
-    # default span before falling back to terms-table stats)
+    # cap on collected block-metadata rows per hot scoring pass (each
+    # row covers ≤ span postings, so the cap admits ~260 G postings at
+    # the default span); past it the pass scores every span
+    # exhaustively instead of collecting WAND bounds
     META_COLLECT_CAP = 2_000_000
-
-    # warm-path threshold: when the memoized terms-table metadata
-    # says the query's terms span ≤ this many blocks, ONE pushed-down
-    # scan fetches the payload and the query completes in a single
-    # Spark job (no speculative probe to discard).  Worst-case driver
-    # pull = 64 blocks × ~1 MB (span 131072 at ~2.5 B/posting × 3
-    # streams) = 64 MB; typical is ≤ 1 MB.
-    FAST_COLLECT_MAX_BLOCKS = 64
 
     # above this many span IDs, a literal IN-list would bloat the
     # Catalyst plan (no pushdown past a few K values, codegen blow-up
     # at 10^5+) — switch to a broadcast-joined span DataFrame
     ISIN_MAX_SPANS = 1024
 
-    # exhaustive (non-pruned) scoring yields ≤k candidate rows per
-    # span; above this many blocks the driver-side merge could see
-    # ~k × #spans rows (76 M at 10^12 docs / span 131072, k=10) —
-    # switch to a distributed TakeOrdered (orderBy+limit collects
-    # exactly k rows, same (score desc, doc_id asc) order; doc_ids
-    # are unique across spans so the selection is deterministic)
-    EXHAUSTIVE_COLLECT_MAX_BLOCKS = 4096
-
-    # the WAND survivors job likewise yields ≤k candidate rows per
-    # surviving span; a low-θ query (all-stopword over 10^12 docs ≈
-    # 7.6 M spans) could leave nearly every span a survivor, so past
-    # this many survivors the boot+rest merge goes through the same
-    # distributed TakeOrdered as the exhaustive fallback — the driver
-    # then receives ≤ n_boot·k (boot) + k (rest) rows at ANY corpus
-    # size.  Same selection semantics: (score desc, doc_id asc) is a
-    # total order because doc_ids are unique across spans.
+    # span scoring yields ≤k candidate rows per (query, span); a
+    # low-θ query (all-stopword over 10^12 docs ≈ 7.6 M spans) could
+    # leave nearly every span a WAND survivor, so past this many
+    # survivor spans the candidates are merged distributed (a per-
+    # query row_number ≤ k) before the collect — the driver then
+    # receives ≤ n_boot·k (boot) + k (rest) rows per query at ANY
+    # corpus size.  (score desc, doc_id asc) is a total order because
+    # doc_ids are unique across spans, so the selection is the same.
     SURVIVOR_COLLECT_MAX_SPANS = 4096
 
     _PAYLOAD_COLS = [
@@ -968,8 +863,8 @@ class SparkIndex:
         """Driver-local BM25 over decoded postings → top-k rows in
         (score desc, doc_id asc) order.
 
-        Float op order is identical to ``_score_spans`` and the pytest
-        oracle: per query term IN QUERY ORDER, ``acc += idf·tf_norm``
+        Float op order is identical to ``_score_spans_batch`` and the
+        pytest oracle: per query term IN QUERY ORDER, ``acc += idf·tf_norm``
         (float64), tie-break (score desc, doc_id asc)."""
         use = {t: decoded[t] for t in qterms if t in decoded}
         if not use:
@@ -985,14 +880,6 @@ class SparkIndex:
             acc[np.searchsorted(all_ids, ids)] += idf[t] * tf_norm
         order = np.lexsort((all_ids, -acc))[:k]
         return [(int(all_ids[i]), float(acc[i])) for i in order]
-
-    def _score_local(
-        self, rows: list, qterms: list[str], idf: dict, k: int
-    ) -> DataFrame:
-        """Driver-local scoring of the (small) collected block rows."""
-        return self._topk_df(
-            self._score_decoded(self._decode_rows(rows), qterms, idf, k)
-        )
 
     def explain_query(self, query: str, field: str = "text", k: int = 10) -> dict:
         """Dry-run planning surface (the ``_analyze`` analog,
@@ -1018,247 +905,51 @@ class SparkIndex:
             "stages": [
                 "1. per-term (df, n_blocks) from the memoized terms-table "
                 "metadata (no job when the terms were seen before)",
-                f"2. ≤{self.FAST_COLLECT_MAX_BLOCKS} blocks or "
-                f"≤{self.LOCAL_SCORE_MAX_POSTINGS} postings → ONE pushed-down "
-                "payload scan + driver-local scoring",
-                f"3. else distributed per-span scoring with block-max WAND "
+                f"2. ≤{self.LOCAL_SCORE_MAX_POSTINGS} postings → ONE "
+                "pushed-down payload scan + driver-local scoring",
+                "3. else distributed per-span scoring with block-max WAND "
                 f"pruning (span-bound metadata capped at {self.META_COLLECT_CAP} "
-                "rows, then a fully distributed bound aggregation)",
+                "blocks, else every span scored); candidates merged "
+                f"distributed past {self.SURVIVOR_COLLECT_MAX_SPANS} "
+                "survivor spans",
             ],
             "block_scan_plan": plan,
         }
 
-    def bm25_topk(
-        self, query: str, k: int = 10, field: str = "text", prune: bool = True,
-        mode: str = "auto",
-    ) -> DataFrame:
+    def bm25_topk(self, query: str, k: int = 10, field: str = "text") -> DataFrame:
         """BM25 top-k, ordered (score desc, doc_id asc).
 
-        With ``result_cache`` enabled (serving processes), an exact
-        repeat returns the memoized ≤k rows with ZERO Spark jobs;
-        results are identical by construction (the cached rows ARE a
-        previous run's output, and the open index is immutable).
+        The query's posting volume picks the path (``_topk_rows``):
+        driver-local scoring of one pushed-down payload scan when it is
+        small, else distributed per-span scoring with block-max WAND
+        pruning — both bit-identical to ``OracleIndex`` (tested).
 
-        mode: "auto" picks the driver-local broadcast-blocks path when
-        the query's posting volume is small (one pushed-down scan),
-        else the distributed per-span path; "local"/"distributed"
-        force a path.  prune=True enables block-max span pruning on
-        the distributed path; all paths are provably identical
-        (tested)."""
-        if not self._result_cache_max:
-            return self._bm25_topk_impl(query, k, field, prune, mode)
-        key = (query, k, field, prune, mode)
-        with self._memo_lock:
-            rows = self._result_cache.get(key)
-            if rows is not None:
-                self._result_cache.move_to_end(key)
-        if rows is None:
-            # the impl's result is already driver-resident (≤k rows,
-            # _topk_df) — materializing it here is a 1-task job.
-            # Computed OUTSIDE the lock (Spark work must not serialize
-            # other handler threads); a concurrent miss on the same
-            # key just recomputes the identical rows.
-            rows = [
-                (int(r["doc_id"]), float(r["score"]))
-                for r in self._bm25_topk_impl(
-                    query, k, field, prune, mode
-                ).collect()
-            ]
+        With ``result_cache`` enabled (serving processes), an exact
+        repeat returns the memoized ≤k rows with ZERO scoring jobs;
+        results are identical by construction (the cached rows ARE a
+        previous run's output, and the open index is immutable)."""
+        return self._topk_df(self._cached_topk(query, k, field))
+
+    def _cached_topk(self, query: str, k: int, field: str) -> list[tuple[int, float]]:
+        """One query's (doc_id, score) top-k rows, through the
+        result memo when it is enabled."""
+        key = (query, k, field)
+        if self._result_cache_max:
+            with self._memo_lock:
+                rows = self._result_cache.get(key)
+                if rows is not None:
+                    self._result_cache.move_to_end(key)
+                    return rows
+        # computed OUTSIDE the lock (Spark work must not serialize
+        # other handler threads); a concurrent miss on the same key
+        # just recomputes the identical rows
+        rows = [(d, s) for _, d, s in self._topk_rows([analyze_query(query)], k, field)]
+        if self._result_cache_max:
             with self._memo_lock:
                 self._result_cache[key] = rows
                 if len(self._result_cache) > self._result_cache_max:
                     self._result_cache.popitem(last=False)
-        return self._topk_df(rows)
-
-    def _bm25_topk_impl(
-        self, query: str, k: int = 10, field: str = "text", prune: bool = True,
-        mode: str = "auto",
-    ) -> DataFrame:
-        """BM25 top-k, ordered (score desc, doc_id asc).
-
-        mode: "auto" picks the driver-local broadcast-blocks path when
-        the query's posting volume is small (one pushed-down scan),
-        else the distributed per-span path; "local"/"distributed"
-        force a path.  prune=True enables block-max span pruning on
-        the distributed path; all paths are provably identical
-        (tested)."""
-        qterms = analyze_query(query)
-        if not qterms:
-            return self.spark.createDataFrame([], "doc_id long, score double")
-        uniq = list(dict.fromkeys(qterms))
-        blocks_q = self._bucket_terms(self.blocks, uniq).where(
-            (F.col("field") == field) & F.col("term").isin(uniq)
-        )
-
-        # path decision + idf from memoized terms-table metadata: a
-        # warm serving process answers a small/medium query with ONE
-        # pushed-down payload scan — no probe job, and no speculative
-        # payload collect that gets discarded when a query turns out
-        # hot (the overflow waste the old probe-first shape had)
-        idf, total_blocks, total_postings = self.idfs(qterms, field)
-
-        if mode == "local" or (
-            mode == "auto"
-            and (
-                total_blocks <= self.FAST_COLLECT_MAX_BLOCKS
-                or total_postings <= self.LOCAL_SCORE_MAX_POSTINGS
-            )
-        ):
-            rows = blocks_q.select(*self._PAYLOAD_COLS).collect()
-            return self._score_local(rows, qterms, idf, k)
-
-        # --- distributed path.  Column-pruned metadata scan (memoized
-        # per term — warm repeats skip it) feeds the per-span WAND
-        # bounds; the cap guards the astronomically-hot case (≥
-        # ~260 G postings across the query's terms): fall back to
-        # fully distributed bound aggregation (never an unbounded
-        # collect).  The cap check uses the memoized terms-table
-        # block counts, so overflow costs no probe job.
-        meta = None
-        if prune and 64 < total_blocks <= self.META_COLLECT_CAP:
-            meta = self._span_meta(uniq, field)
-
-        # pruning pays for its extra driver round-trips only when
-        # there are enough blocks to skip; below the threshold the
-        # exhaustive path is one job instead of three
-        if prune and total_blocks <= 64:
-            prune = False
-
-        def merge_topk(rows) -> DataFrame:
-            # per-span candidates are ≤ k rows each — final top-k is a
-            # driver-side sort of a few hundred rows, not a Spark job
-            rows = sorted(rows, key=lambda r: (-r["score"], r["doc_id"]))[:k]
-            return self._topk_df(
-                [(int(r["doc_id"]), float(r["score"])) for r in rows]
-            )
-
-        def rest_topk_rows(scored: DataFrame) -> list:
-            # distributed TakeOrdered over the survivors' candidates:
-            # the rest contributes at most its own global top-k to the
-            # final answer, so collecting exactly those k rows is
-            # selection-identical to collecting every ≤k-per-span
-            # candidate (scores themselves are untouched)
-            return (
-                scored.orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-                .collect()
-            )
-
-        def merge_exhaustive() -> DataFrame:
-            # full scoring of every span (pruning off / boot under-
-            # filled).  Small queries collect the ≤k-per-span
-            # candidates and merge driver-side; past
-            # EXHAUSTIVE_COLLECT_MAX_BLOCKS the merge itself goes
-            # distributed (TakeOrdered) so the driver receives
-            # exactly k rows at ANY corpus size
-            cand = self._score_spans(blocks_q, qterms, idf, k)
-            if total_blocks > self.EXHAUSTIVE_COLLECT_MAX_BLOCKS:
-                rows = (
-                    cand.orderBy(F.desc("score"), F.asc("doc_id"))
-                    .limit(k)
-                    .collect()
-                )
-                return self._topk_df(
-                    [(int(r["doc_id"]), float(r["score"])) for r in rows]
-                )
-            return merge_topk(cand.collect())
-
-        wts = {u: idf[u] * qterms.count(u) for u in uniq}
-        n_boot = max(1, (k * 2 + self.span - 1) // self.span, 4)
-
-        if prune and meta is not None:
-            ub: dict[int, float] = {}
-            # per-term accumulation order — the same order the batch
-            # path uses, so both compute identical bounds
-            for t, rows in meta.items():
-                w = wts[t]
-                for span_id, max_tf_norm, enc_avgdl in rows:
-                    # inflate stale bounds when the corpus avgdl moved
-                    # since a block was encoded (post-compaction
-                    # safety — see build.py)
-                    infl = max(1.0, self.avgdl / enc_avgdl)
-                    ub[span_id] = ub.get(span_id, 0.0) + (
-                        w * max_tf_norm * infl
-                    )
-            boot_spans = [
-                s for s, _ in sorted(ub.items(), key=lambda kv: -kv[1])[:n_boot]
-            ]
-            boot_rows = self._score_spans(
-                self._span_filter(blocks_q, boot_spans), qterms, idf, k
-            ).collect()
-            boot_rows = sorted(
-                boot_rows, key=lambda r: (-r["score"], r["doc_id"])
-            )[:k]
-            if len(boot_rows) >= k:
-                theta = boot_rows[-1]["score"]
-                survivors = [
-                    s
-                    for s, b in ub.items()
-                    if b >= theta and s not in set(boot_spans)
-                ]
-                if not survivors:
-                    rest_rows = []
-                else:
-                    rest_scored = self._score_spans(
-                        self._span_filter(blocks_q, survivors), qterms, idf, k
-                    )
-                    rest_rows = (
-                        rest_topk_rows(rest_scored)
-                        if len(survivors) > self.SURVIVOR_COLLECT_MAX_SPANS
-                        else rest_scored.collect()
-                    )
-                return merge_topk(list(boot_rows) + list(rest_rows))
-            return merge_exhaustive()
-
-        if prune:  # meta overflowed the cap: distributed bound agg.
-            # Per-span upper bound = Σ_blocks wt(term)·max_tf_norm·
-            # inflation, as ONE groupBy(span_id) — #spans rows, never
-            # #blocks.  Only the n_boot highest-bound spans are
-            # collected; survivors stay a DataFrame and join against
-            # the blocks (AQE broadcasts it when small).
-            wts_df = self.spark.createDataFrame(
-                [(t, float(wts[t])) for t in uniq], "term string, wt double"
-            )
-            bounds = (
-                blocks_q.join(F.broadcast(wts_df), "term")
-                .groupBy("span_id")
-                .agg(
-                    F.sum(
-                        F.col("wt")
-                        * F.col("max_tf_norm")
-                        * F.greatest(
-                            F.lit(1.0), F.lit(self.avgdl) / F.col("enc_avgdl")
-                        )
-                    ).alias("ub")
-                )
-            )
-            boot = bounds.orderBy(F.desc("ub"), F.asc("span_id")).limit(n_boot).collect()
-            boot_spans = [int(r["span_id"]) for r in boot]
-            boot_rows = self._score_spans(
-                self._span_filter(blocks_q, boot_spans), qterms, idf, k
-            ).collect()
-            boot_rows = sorted(
-                boot_rows, key=lambda r: (-r["score"], r["doc_id"])
-            )[:k]
-            if len(boot_rows) >= k:
-                theta = boot_rows[-1]["score"]
-                survivors_df = bounds.where(
-                    (F.col("ub") >= theta)
-                    & ~F.col("span_id").isin(boot_spans)
-                ).select("span_id")
-                # this branch only runs when the query's metadata
-                # exceeded META_COLLECT_CAP (~260 G postings), so the
-                # survivor count is unknowable driver-side and must be
-                # assumed huge — always merge distributed (≤k rows)
-                rest_rows = rest_topk_rows(
-                    self._score_spans(
-                        blocks_q.join(survivors_df, "span_id"), qterms, idf, k
-                    )
-                )
-                return merge_topk(list(boot_rows) + list(rest_rows))
-            return merge_exhaustive()
-
-        return merge_exhaustive()
+        return rows
 
     def _score_spans_batch(
         self,
@@ -1267,25 +958,31 @@ class SparkIndex:
         idf_map: dict[int, dict[str, float]],
         k: int,
         allowed: dict[int, frozenset] | None,
+        merge: bool = False,
     ) -> list:
         """Per-span exact scoring for MANY queries in ONE job: the
         span's blocks are decoded ONCE (same vectorized batch decode
-        as ``_score_spans``), then each query accumulates over its own
+        as ``_decode``), then each query accumulates over its own
         terms' posting slices.  ``allowed`` optionally restricts each
         query to a span set (batched WAND: boot / survivor spans per
         query).
 
-        Float identity with the per-query paths: sorting the span's
+        Float identity with the driver-local path: sorting the span's
         blocks by (term, first_doc) makes each term's postings one
         contiguous slice in first_doc order; accumulating per query
         term IN QUERY ORDER with one ``np.add.at`` per term applies
-        each accumulator slot's additions in exactly the per-query
-        order (term occurrences in query order, postings in block
-        order) — the same per-slot sequence as ``_score_spans`` and
-        ``_score_decoded``, so every score bit matches.  Duplicate
-        query terms accumulate once per occurrence, as everywhere
-        else.  Returns collected (query_id, doc_id, score) candidate
-        rows, ≤k per (query, span)."""
+        each accumulator slot's additions in exactly the order of
+        ``_score_decoded`` and the oracle (term occurrences in query
+        order, postings in block order), so every score bit matches.
+        Duplicate query terms accumulate once per occurrence, as
+        everywhere else.
+
+        Returns collected (query_id, doc_id, score) candidate rows, ≤k
+        per (query, span) — or, with ``merge``, ≤k per query: the
+        candidates are cut to each query's top k distributed (a
+        row_number window over (score desc, doc_id asc)) before the
+        collect, so the driver's receipt does not grow with the
+        number of spans scored."""
         from .codec import _varint_decode
 
         span = self.span
@@ -1354,11 +1051,19 @@ class SparkIndex:
                 )
             return pd.concat(outs, ignore_index=True)
 
-        return (
-            blocks.groupBy("span_id")
-            .applyInPandas(score, schema="query_id int, doc_id long, score double")
-            .collect()
+        scored = blocks.groupBy("span_id").applyInPandas(
+            score, schema="query_id int, doc_id long, score double"
         )
+        if merge:
+            rank = Window.partitionBy("query_id").orderBy(
+                F.desc("score"), F.asc("doc_id")
+            )
+            scored = (
+                scored.withColumn("_rank", F.row_number().over(rank))
+                .where(F.col("_rank") <= k)
+                .drop("_rank")
+            )
+        return scored.collect()
 
     @staticmethod
     def _merge_batch_rows(rows, k: int) -> dict[int, list[tuple[int, float]]]:
@@ -1380,9 +1085,9 @@ class SparkIndex:
         k: int,
         field: str,
     ) -> list[tuple[int, int, float]]:
-        """Distributed batched WAND: score every hot query of a batch
-        in at most TWO span-scoring jobs (plus one capped metadata
-        collect), regardless of batch size.
+        """Distributed batched WAND: score every hot query in at most
+        TWO span-scoring jobs (plus one capped metadata collect),
+        regardless of how many queries there are.
 
         1. One column-pruned metadata scan over the union of all hot
            queries' terms → per-(query, span) upper bounds.
@@ -1392,15 +1097,16 @@ class SparkIndex:
         3. Per query: θ = kth boot score; survivors = spans with
            bound ≥ θ.  Queries whose boot pass returned < k rows keep
            every span as survivor (exhaustive completion).
-        4. Job 2 scores the union of survivor spans the same way.
+        4. Job 2 scores the union of survivor spans the same way,
+           merged distributed past SURVIVOR_COLLECT_MAX_SPANS.
 
-        Pruning is per-query score-lossless (same argument as the
-        single-query path: a span whose bound is below an achieved
-        kth score cannot contribute), and per-doc floats are span-
-        local, so results are bit-identical to per-query evaluation
-        no matter how spans land in job 1 vs job 2.  When the
-        metadata collect overflows its cap, falls back to ONE
-        exhaustive batch-scoring job (never an unbounded collect)."""
+        Pruning is per-query score-lossless (a span whose bound is
+        below an achieved kth score cannot contribute), and per-doc
+        floats are span-local, so results are bit-identical to
+        exhaustive scoring no matter how spans land in job 1 vs job 2.
+        When the metadata would overflow META_COLLECT_CAP, ONE
+        exhaustive scoring job runs instead, always merged distributed
+        (the span count is unknown driver-side)."""
         uniq_hot = list(
             dict.fromkeys(t for qs in queries_map.values() for t in qs)
         )
@@ -1409,11 +1115,11 @@ class SparkIndex:
         )
         # cap check from the memoized terms-table block counts (no
         # probe job); under the cap, the span metadata itself comes
-        # from the per-term memo — warm repeat batches skip the scan
+        # from the per-term memo — warm repeats skip the scan
         tm = self._term_meta(uniq_hot, field)
         if sum(m[1] for m in tm.values()) > self.META_COLLECT_CAP:
             rows = self._score_spans_batch(
-                blocks_q, queries_map, idf_map, k, allowed=None
+                blocks_q, queries_map, idf_map, k, allowed=None, merge=True
             )
             merged = self._merge_batch_rows(rows, k)
             return [
@@ -1477,6 +1183,7 @@ class SparkIndex:
                 idf_map,
                 k,
                 allowed=survivors,
+                merge=len(union2) > self.SURVIVOR_COLLECT_MAX_SPANS,
             )
             if union2
             else []
@@ -1498,77 +1205,85 @@ class SparkIndex:
         26-134``): per-query jobs pay a fixed driver/scheduler cost
         that DOMINATES warm latency and gets WORSE with more cores
         (measured 0.66x 2→8-core query scaling in round 2).  Batching
-        amortizes it:
-
-        - COLD queries (per-query posting volume under the local cap)
-          are greedily packed into shared pushed-down scans: ONE scan
-          + decode serves a whole chunk, scored per query on the
-          driver.
-        - HOT queries (any single query over the cap — its blocks can
-          never be collected) all go through ONE batched distributed
-          WAND: ≤2 span-scoring jobs for the entire hot set
-          (``_bm25_batch_distributed``), never a per-query job loop.
-
-        Per-query results are row-for-row IDENTICAL to
-        ``bm25_topk(query, k)`` (same decode order, same float op
-        order, same tie-break — oracle-gated and tested).
+        amortizes it (``_topk_rows``).  Per-query results are
+        row-for-row IDENTICAL to ``bm25_topk(query, k)`` — it is the
+        same scorer with one query (oracle-gated and tested).
 
         Returns (query_id int, doc_id long, score double), rows
         ordered by (query_id, score desc, doc_id asc)."""
-        qterms_list = [analyze_query(q) for q in queries]
-        all_uniq = list(dict.fromkeys(t for qs in qterms_list for t in qs))
-        out: list[tuple[int, int, float]] = []
-        if all_uniq:
-            meta = self._term_meta(all_uniq, field)
-            cold: list[int] = []
-            hot: dict[int, list[str]] = {}
-            for qi, qs in enumerate(qterms_list):
-                if not qs:
-                    continue
-                vol = sum(meta[t][0] for t in set(qs))
-                if vol <= self.LOCAL_SCORE_MAX_POSTINGS:
-                    cold.append(qi)
-                else:
-                    hot[qi] = qs
-
-            # greedy chunks of cold queries: each chunk's UNION of
-            # term postings fits the local cap → one scan per chunk
-            chunks: list[list[int]] = []
-            cur: list[int] = []
-            cur_terms: set[str] = set()
-            for qi in cold:
-                nt = cur_terms | set(qterms_list[qi])
-                if cur and sum(meta[t][0] for t in nt) > self.LOCAL_SCORE_MAX_POSTINGS:
-                    chunks.append(cur)
-                    cur, cur_terms = [qi], set(qterms_list[qi])
-                else:
-                    cur, cur_terms = cur + [qi], nt
-            if cur:
-                chunks.append(cur)
-
-            for chunk in chunks:
-                chunk_terms = list(
-                    dict.fromkeys(t for qi in chunk for t in qterms_list[qi])
-                )
-                blocks_q = self._bucket_terms(self.blocks, chunk_terms).where(
-                    (F.col("field") == field) & F.col("term").isin(chunk_terms)
-                )
-                rows = blocks_q.select(*self._PAYLOAD_COLS).collect()
-                decoded = self._decode_rows(rows)
-                for qi in chunk:
-                    qterms = qterms_list[qi]
-                    idf = self._idf({t: meta[t][0] for t in qterms}, qterms)
-                    for d, s in self._score_decoded(decoded, qterms, idf, k):
-                        out.append((qi, d, s))
-
-            if hot:
-                idf_map = {
-                    qi: self._idf({t: meta[t][0] for t in qs}, qs)
-                    for qi, qs in hot.items()
-                }
-                out.extend(self._bm25_batch_distributed(hot, idf_map, k, field))
-            out.sort(key=lambda r: r[0])  # stable: keeps per-query order
+        out = self._topk_rows([analyze_query(q) for q in queries], k, field)
         rdd = self.spark.sparkContext.parallelize(out, 1)
         return self.spark.createDataFrame(
             rdd, "query_id int, doc_id long, score double"
         )
+
+    def _topk_rows(
+        self, qterms_list: list[list[str]], k: int, field: str
+    ) -> list[tuple[int, int, float]]:
+        """The one BM25 top-k scorer, for one query or many:
+        (query_id, doc_id, score) rows ordered by (query_id, score
+        desc, doc_id asc); query_id indexes ``qterms_list``.
+
+        - COLD queries (posting volume ≤ LOCAL_SCORE_MAX_POSTINGS,
+          from the memoized terms-table metadata) are greedily packed
+          into shared pushed-down scans: ONE payload collect + decode
+          serves a whole chunk, scored per query on the driver
+          (``_score_decoded``).
+        - HOT queries (over the cap — their blocks can never be
+          collected) all go through ONE batched distributed WAND:
+          ≤2 span-scoring jobs for the entire hot set
+          (``_bm25_batch_distributed``), never a per-query job loop."""
+        all_uniq = list(dict.fromkeys(t for qs in qterms_list for t in qs))
+        out: list[tuple[int, int, float]] = []
+        if not all_uniq:
+            return out
+        meta = self._term_meta(all_uniq, field)
+        cold: list[int] = []
+        hot: dict[int, list[str]] = {}
+        for qi, qs in enumerate(qterms_list):
+            if not qs:
+                continue
+            vol = sum(meta[t][0] for t in set(qs))
+            if vol <= self.LOCAL_SCORE_MAX_POSTINGS:
+                cold.append(qi)
+            else:
+                hot[qi] = qs
+
+        # greedy chunks of cold queries: each chunk's UNION of term
+        # postings fits the local cap → one scan per chunk
+        chunks: list[list[int]] = []
+        cur: list[int] = []
+        cur_terms: set[str] = set()
+        for qi in cold:
+            nt = cur_terms | set(qterms_list[qi])
+            if cur and sum(meta[t][0] for t in nt) > self.LOCAL_SCORE_MAX_POSTINGS:
+                chunks.append(cur)
+                cur, cur_terms = [qi], set(qterms_list[qi])
+            else:
+                cur, cur_terms = cur + [qi], nt
+        if cur:
+            chunks.append(cur)
+
+        for chunk in chunks:
+            chunk_terms = list(
+                dict.fromkeys(t for qi in chunk for t in qterms_list[qi])
+            )
+            blocks_q = self._bucket_terms(self.blocks, chunk_terms).where(
+                (F.col("field") == field) & F.col("term").isin(chunk_terms)
+            )
+            rows = blocks_q.select(*self._PAYLOAD_COLS).collect()
+            decoded = self._decode_rows(rows)
+            for qi in chunk:
+                qterms = qterms_list[qi]
+                idf = self._idf({t: meta[t][0] for t in qterms}, qterms)
+                for d, s in self._score_decoded(decoded, qterms, idf, k):
+                    out.append((qi, d, s))
+
+        if hot:
+            idf_map = {
+                qi: self._idf({t: meta[t][0] for t in qs}, qs)
+                for qi, qs in hot.items()
+            }
+            out.extend(self._bm25_batch_distributed(hot, idf_map, k, field))
+        out.sort(key=lambda r: r[0])  # stable: keeps per-query order
+        return out

@@ -230,15 +230,45 @@ def test_facet_counts_index_equals_direct(corpus):
         assert total == si.or_docs(terms).count(), terms
 
 
+def _topk(si, q, k=10, path="local"):
+    """bm25_topk rows with the scoring path forced through the class
+    constants.  "local" is the default for every fixture query (all
+    are far under the posting cap); "pruned" forces the query hot
+    (distributed block-max WAND); "exhaustive" forces it hot with the
+    block-metadata cap exceeded (every span scored, merged
+    distributed)."""
+    with pytest.MonkeyPatch.context() as mp:
+        if path != "local":
+            mp.setattr(type(si), "LOCAL_SCORE_MAX_POSTINGS", 0)
+        if path == "exhaustive":
+            mp.setattr(type(si), "META_COLLECT_CAP", 0)
+        return [(r["doc_id"], r["score"]) for r in si.bm25_topk(q, k).collect()]
+
+
+def _spy_candidate_collects(monkeypatch):
+    """Record every candidate collect of the span scorer as (merge,
+    per-query row counts) — the rows the driver actually receives
+    from distributed scoring."""
+    from collections import Counter
+
+    seen: list[tuple[bool, dict[int, int]]] = []
+    orig = SparkIndex._score_spans_batch
+
+    def spy(self, blocks, queries_map, idf_map, k, allowed, merge=False):
+        rows = orig(self, blocks, queries_map, idf_map, k, allowed, merge)
+        seen.append((merge, dict(Counter(int(r["query_id"]) for r in rows))))
+        return rows
+
+    monkeypatch.setattr(SparkIndex, "_score_spans_batch", spy)
+    return seen
+
+
 @pytest.mark.parametrize("mode", ["local", "distributed"])
 @pytest.mark.parametrize("q", QUERIES)
 def test_bm25_rank_identity(corpus, q, mode):
     si, oi, _ = corpus
     want = oi.bm25_topk(q, 10)
-    got = [
-        (r["doc_id"], r["score"])
-        for r in si.bm25_topk(q, 10, prune=False, mode=mode).collect()
-    ]
+    got = _topk(si, q, 10, path="local" if mode == "local" else "exhaustive")
     assert [g[0] for g in got] == [w[0] for w in want], (q, mode)
     for g, w in zip(got, want):
         assert abs(g[1] - w[1]) < 1e-9, (q, mode, g, w)
@@ -247,71 +277,70 @@ def test_bm25_rank_identity(corpus, q, mode):
 @pytest.mark.parametrize("q", QUERIES)
 def test_wand_pruning_lossless(corpus, q):
     si, _, _ = corpus
-    exhaustive = [
-        (r["doc_id"], r["score"])
-        for r in si.bm25_topk(q, 10, prune=False, mode="distributed").collect()
-    ]
-    pruned = [
-        (r["doc_id"], r["score"])
-        for r in si.bm25_topk(q, 10, prune=True, mode="distributed").collect()
-    ]
+    exhaustive = _topk(si, q, 10, path="exhaustive")
+    pruned = _topk(si, q, 10, path="pruned")
     assert pruned == exhaustive, q
 
 
 @pytest.mark.parametrize("q", QUERIES)
 def test_local_path_identical_to_distributed(corpus, q):
-    """The broadcast-blocks fast path must be bit-identical to the
+    """The driver-local path must be bit-identical to the
     distributed per-span path (same float64 op order by design)."""
     si, _, _ = corpus
-    local = [
-        (r["doc_id"], r["score"])
-        for r in si.bm25_topk(q, 10, mode="local").collect()
-    ]
-    dist = [
-        (r["doc_id"], r["score"])
-        for r in si.bm25_topk(q, 10, mode="distributed").collect()
-    ]
-    assert local == dist, q
+    assert _topk(si, q, 10, path="local") == _topk(si, q, 10, path="pruned"), q
 
 
 def test_exhaustive_merge_distributed_and_bounded(corpus, monkeypatch):
-    """With pruning off and many spans, the exhaustive fallback must
-    NOT collect ~k-per-span candidates to the driver (76 M rows at
-    10^12 docs): past EXHAUSTIVE_COLLECT_MAX_BLOCKS it runs a
-    distributed TakeOrdered and the driver receives EXACTLY ≤k rows —
-    rank-identical to the driver-side merge."""
+    """When the block metadata overflows META_COLLECT_CAP every span
+    is scored, and the span count is unknown driver-side (76 M rows
+    of ≤k-per-span candidates at 10^12 docs): the candidates must be
+    cut to k per query distributed, so the driver's one candidate
+    collect holds ≤k rows per query — for one query and for a batch
+    — and the rows stay identical to local scoring and the oracle."""
     si, oi, _ = corpus
     q, k = "tok1 tok3", 10
+    local = _topk(si, q, k)
+    local2 = _topk(si, "tok2 tok5", k)
     want = oi.bm25_topk(q, k)
-
-    collected_sizes = []
-    orig_topk_df = type(si)._topk_df
-
-    def spy_topk_df(self, rows):
-        collected_sizes.append(len(rows))
-        return orig_topk_df(self, rows)
-
-    monkeypatch.setattr(type(si), "_topk_df", spy_topk_df)
-    monkeypatch.setattr(type(si), "EXHAUSTIVE_COLLECT_MAX_BLOCKS", 0)
-    got = [
-        (r["doc_id"], r["score"])
-        for r in si.bm25_topk(q, k, prune=False, mode="distributed").collect()
-    ]
-    assert [g[0] for g in got] == [w[0] for w in want]
-    for g, w in zip(got, want):
+    assert [g[0] for g in local] == [w[0] for w in want]
+    for g, w in zip(local, want):
         assert abs(g[1] - w[1]) < 1e-9
-    # the driver-side materialization saw only the final k rows
-    assert collected_sizes and all(n <= k for n in collected_sizes)
+
+    # premise: unmerged, the candidates exceed k (several spans hit)
+    blocks = si.blocks.where(
+        (si.blocks["field"] == "text") & si.blocks["term"].isin(["tok1", "tok3"])
+    )
+    idf = si._idf({t: m[0] for t, m in si._term_meta(["tok1", "tok3"]).items()},
+                  ["tok1", "tok3"])
+    unmerged = si._score_spans_batch(blocks, {0: ["tok1", "tok3"]}, {0: idf}, k, None)
+    assert len(unmerged) > k
+
+    seen = _spy_candidate_collects(monkeypatch)
+    monkeypatch.setattr(type(si), "LOCAL_SCORE_MAX_POSTINGS", 0)
+    monkeypatch.setattr(type(si), "META_COLLECT_CAP", 0)
+    got = [(r["doc_id"], r["score"]) for r in si.bm25_topk(q, k).collect()]
+    assert got == local
+    assert seen == [(True, {0: k})], seen
+
+    queries = [q, "tok2 tok5"]
+    seen.clear()
+    got_batch = [
+        (r["query_id"], r["doc_id"], r["score"])
+        for r in si.bm25_topk_batch(queries, k).collect()
+    ]
+    assert [(d, s) for qi, d, s in got_batch if qi == 0] == local
+    assert [(d, s) for qi, d, s in got_batch if qi == 1] == local2
+    assert seen == [(True, {0: k, 1: k})], seen
 
 
 def test_meta_cap_fallback_identical(corpus, monkeypatch):
-    """Astronomically-hot queries exceed META_COLLECT_CAP and fall
-    back to terms-table stats — results must be identical."""
+    """Astronomically-hot queries exceed META_COLLECT_CAP and score
+    every span instead of collecting WAND bounds — results must be
+    identical."""
     si, oi, _ = corpus
     normal = [
         (r["doc_id"], r["score"]) for r in si.bm25_topk("tok1 tok3", 10).collect()
     ]
-    monkeypatch.setattr(type(si), "FAST_COLLECT_MAX_BLOCKS", 0)
     monkeypatch.setattr(type(si), "LOCAL_SCORE_MAX_POSTINGS", 0)
     monkeypatch.setattr(type(si), "META_COLLECT_CAP", 1)
     fallback = [
@@ -322,21 +351,32 @@ def test_meta_cap_fallback_identical(corpus, monkeypatch):
 
 @pytest.mark.parametrize("q", ["tok1 tok3 tok17", "tok1", "tok2 tok2 tok5"])
 def test_distributed_bounds_prune_identical(corpus, monkeypatch, q):
-    """When block metadata can't be collected (META_COLLECT_CAP hit),
-    WAND bounds aggregate distributed (groupBy span_id) and survivors
-    apply as a join — results must equal the exhaustive path."""
+    """META_COLLECT_CAP is compared with the query's memoized block
+    count: at the count the WAND bounds are collected (pruned path),
+    one below it every span is scored (exhaustive path) — both equal
+    the driver-local rows."""
     si, _, _ = corpus
-    exhaustive = [
-        (r["doc_id"], r["score"])
-        for r in si.bm25_topk(q, 10, prune=False, mode="distributed").collect()
-    ]
-    monkeypatch.setattr(type(si), "FAST_COLLECT_MAX_BLOCKS", 0)
-    monkeypatch.setattr(type(si), "META_COLLECT_CAP", 1)
-    pruned = [
-        (r["doc_id"], r["score"])
-        for r in si.bm25_topk(q, 10, prune=True, mode="distributed").collect()
-    ]
-    assert pruned == exhaustive, q
+    local = _topk(si, q, 10)
+    uniq = list(dict.fromkeys(q.split()))
+    n_blocks = sum(m[1] for m in si._term_meta(uniq).values())
+    assert n_blocks > 1
+
+    meta_calls: list[list[str]] = []
+    orig = type(si)._span_meta
+
+    def spy(self, terms, field):
+        meta_calls.append(terms)
+        return orig(self, terms, field)
+
+    monkeypatch.setattr(type(si), "_span_meta", spy)
+    monkeypatch.setattr(type(si), "LOCAL_SCORE_MAX_POSTINGS", 0)
+    monkeypatch.setattr(type(si), "META_COLLECT_CAP", n_blocks)
+    pruned = [(r["doc_id"], r["score"]) for r in si.bm25_topk(q, 10).collect()]
+    assert meta_calls == [uniq]
+    monkeypatch.setattr(type(si), "META_COLLECT_CAP", n_blocks - 1)
+    exhaustive = [(r["doc_id"], r["score"]) for r in si.bm25_topk(q, 10).collect()]
+    assert meta_calls == [uniq], "the over-cap path must not collect bounds"
+    assert pruned == exhaustive == local, q
 
 
 def test_many_span_survivors_broadcast_join(corpus, monkeypatch):
@@ -345,15 +385,9 @@ def test_many_span_survivors_broadcast_join(corpus, monkeypatch):
     result-identical."""
     si, _, _ = corpus
     q = "tok1 tok3 tok17"
-    baseline = [
-        (r["doc_id"], r["score"])
-        for r in si.bm25_topk(q, 10, prune=True, mode="distributed").collect()
-    ]
+    baseline = _topk(si, q, 10, path="pruned")
     monkeypatch.setattr(type(si), "ISIN_MAX_SPANS", 0)
-    joined = [
-        (r["doc_id"], r["score"])
-        for r in si.bm25_topk(q, 10, prune=True, mode="distributed").collect()
-    ]
+    joined = _topk(si, q, 10, path="pruned")
     assert joined == baseline
 
     # plan-level: the join form contains a broadcast join on span_id
@@ -366,10 +400,16 @@ def test_many_span_survivors_broadcast_join(corpus, monkeypatch):
 def test_survivor_merge_distributed_and_bounded(spark, tmp_path, monkeypatch):
     """A low-θ query can leave nearly every span a WAND survivor
     (all-stopword query over 10^12 docs ≈ 7.6 M spans, ×k candidate
-    rows each): past SURVIVOR_COLLECT_MAX_SPANS the boot+rest merge
-    must run the same distributed TakeOrdered as the exhaustive
-    fallback, so direct driver receipt stays ≤ n_boot·k (boot) + k
-    (rest) rows — and results stay rank-identical."""
+    rows each).  The driver's candidate collects, per regime:
+
+    1. default caps: boot (≤ n_boot·k rows) + survivors, both
+       collected unmerged;
+    2. SURVIVOR_COLLECT_MAX_SPANS = 0: the survivors' candidates are
+       cut to k distributed before the collect;
+    3. META_COLLECT_CAP exceeded: ONE exhaustive collect, always
+       merged (≤ k rows).
+
+    Every regime returns the exhaustive (and driver-local) rows."""
     docs = assign_doc_ids(synth_transcripts(spark, N_TURNS, seed=11))
     d = str(tmp_path / "surv_idx")
     IndexBuilder(d, span=8).build(docs)  # 600 docs / span 8 → ~75 spans
@@ -377,66 +417,33 @@ def test_survivor_merge_distributed_and_bounded(spark, tmp_path, monkeypatch):
     q, k = "tok1 tok2", 10
     n_boot = max(1, (k * 2 + si.span - 1) // si.span, 4)
 
-    exhaustive = [
-        (r["doc_id"], r["score"])
-        for r in si.bm25_topk(q, k, prune=False, mode="distributed").collect()
-    ]
+    exhaustive = _topk(si, q, k, path="exhaustive")
+    assert _topk(si, q, k) == exhaustive
 
-    # spy: count every DIRECT collect() of a _score_spans result —
-    # boot rows always; the survivors' candidates only when the
-    # driver-side merge is taken (the distributed merge derives an
-    # orderBy+limit DataFrame, so its collect is not counted here)
-    sizes: list[int] = []
-    orig_score_spans = type(si)._score_spans
+    seen = _spy_candidate_collects(monkeypatch)
+    monkeypatch.setattr(type(si), "LOCAL_SCORE_MAX_POSTINGS", 0)
 
-    def spy(self, blocks, qterms, idf, kk):
-        df = orig_score_spans(self, blocks, qterms, idf, kk)
-        inner = df.collect
+    # phase 1 — default cap: boot + survivors, both unmerged; the
+    # survivors' candidates exceed k, so phase 2's cut is real
+    assert _topk(si, q, k, path="pruned") == exhaustive
+    assert [m for m, _ in seen] == [False, False], seen
+    assert seen[0][1][0] <= n_boot * k
+    assert seen[1][1].get(0, 0) > k, f"test premise: many survivor candidates: {seen}"
 
-        def counted():
-            rows = inner()
-            sizes.append(len(rows))
-            return rows
-
-        df.collect = counted
-        return df
-
-    monkeypatch.setattr(type(si), "_score_spans", spy)
-
-    # phase 1 — default cap: survivors exist and ARE collected
-    # driver-side (boot + rest = two direct collects)
-    got = [
-        (r["doc_id"], r["score"])
-        for r in si.bm25_topk(q, k, prune=True, mode="distributed").collect()
-    ]
-    assert got == exhaustive
-    assert len(sizes) == 2, f"expected boot+rest collects, saw {sizes}"
-    assert sizes[1] > 0, "test premise: the query must have survivors"
-
-    # phase 2 — cap forced to 0: the rest merge goes distributed; the
-    # only direct collect left is the boot (≤ n_boot·k rows), and the
-    # distributed rest is limit(k) by construction
+    # phase 2 — survivor cap 0: the rest merge goes distributed
     monkeypatch.setattr(type(si), "SURVIVOR_COLLECT_MAX_SPANS", 0)
-    sizes.clear()
-    got = [
-        (r["doc_id"], r["score"])
-        for r in si.bm25_topk(q, k, prune=True, mode="distributed").collect()
-    ]
-    assert got == exhaustive
-    assert len(sizes) == 1, f"survivors must not collect driver-side: {sizes}"
-    assert sizes[0] <= n_boot * k
+    seen.clear()
+    assert _topk(si, q, k, path="pruned") == exhaustive
+    assert [m for m, _ in seen] == [False, True], seen
+    assert seen[0][1][0] <= n_boot * k
+    assert seen[1][1][0] <= k
 
-    # phase 3 — META_COLLECT_CAP exceeded (distributed bound agg):
-    # the rest merge is ALWAYS distributed on that path
-    monkeypatch.setattr(type(si), "META_COLLECT_CAP", 1)
-    sizes.clear()
-    got = [
-        (r["doc_id"], r["score"])
-        for r in si.bm25_topk(q, k, prune=True, mode="distributed").collect()
-    ]
-    assert got == exhaustive
-    assert len(sizes) == 1, f"survivors must not collect driver-side: {sizes}"
-    assert sizes[0] <= n_boot * k
+    # phase 3 — META_COLLECT_CAP exceeded: one exhaustive collect,
+    # always merged, whatever the survivor cap
+    monkeypatch.setattr(type(si), "SURVIVOR_COLLECT_MAX_SPANS", 4096)
+    seen.clear()
+    assert _topk(si, q, k, path="exhaustive") == exhaustive
+    assert seen == [(True, {0: k})], seen
 
 
 def test_batch_identical_to_per_query(corpus):
@@ -457,8 +464,8 @@ def test_batch_identical_to_per_query(corpus):
 
 
 def test_batch_fallback_identical(corpus, monkeypatch):
-    """Past the local-posting cap the batch falls back to per-query
-    evaluation — results must not change."""
+    """Past the local-posting cap every query of the batch goes
+    through the distributed batched WAND — results must not change."""
     si, _, _ = corpus
     queries = ["tok1 tok3", "tok17"]
     baseline = [
@@ -466,7 +473,6 @@ def test_batch_fallback_identical(corpus, monkeypatch):
         for r in si.bm25_topk_batch(queries, 10).collect()
     ]
     monkeypatch.setattr(type(si), "LOCAL_SCORE_MAX_POSTINGS", 0)
-    monkeypatch.setattr(type(si), "FAST_COLLECT_MAX_BLOCKS", 0)
     fallback = [
         (r["query_id"], r["doc_id"], r["score"])
         for r in si.bm25_topk_batch(queries, 10).collect()
@@ -502,7 +508,6 @@ def test_batch_distributed_identical_and_bounded_jobs(corpus, monkeypatch):
         for r in si.bm25_topk_batch(queries, 10).collect()
     ]
     monkeypatch.setattr(type(si), "LOCAL_SCORE_MAX_POSTINGS", 0)
-    monkeypatch.setattr(type(si), "FAST_COLLECT_MAX_BLOCKS", 0)
     sc = si.spark.sparkContext
 
     def count_jobs(group, qs):
@@ -573,7 +578,7 @@ def test_span_meta_memo_warm_repeat(spark, tmp_path, monkeypatch):
     respected: past it, terms are fetched per-query uncached."""
     docs = assign_doc_ids(synth_transcripts(spark, N_TURNS, seed=13))
     d = str(tmp_path / "memo_idx")
-    IndexBuilder(d, span=8).build(docs)  # small span → >64 blocks
+    IndexBuilder(d, span=8).build(docs)  # small span → many spans
     si = SparkIndex(spark, d)
     q, k = "tok1 tok2 tok9", 10
 
@@ -588,40 +593,30 @@ def test_span_meta_memo_warm_repeat(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(type(si), "_span_meta", spy)
 
-    exhaustive = [
-        (r["doc_id"], r["score"])
-        for r in si.bm25_topk(q, k, prune=False, mode="distributed").collect()
-    ]
-    cold = [
-        (r["doc_id"], r["score"])
-        for r in si.bm25_topk(q, k, mode="distributed").collect()
-    ]
-    warm = [
-        (r["doc_id"], r["score"])
-        for r in si.bm25_topk(q, k, mode="distributed").collect()
-    ]
+    exhaustive = _topk(si, q, k, path="exhaustive")
+    cold = _topk(si, q, k, path="pruned")
+    warm = _topk(si, q, k, path="pruned")
     assert cold == warm == exhaustive
     assert missing_per_call[0] == ["tok1", "tok2", "tok9"]  # cold: fetch all
     assert missing_per_call[1] == []                        # warm: memo only
 
-    # batch path shares the memo: a batch repeating one term + one new
+    # batch path shares the memo: a hot batch repeating one term + one new
+    monkeypatch.setattr(type(si), "LOCAL_SCORE_MAX_POSTINGS", 0)
     batch = si.bm25_topk_batch([q, "tok1 tok17"], k=k)
     got = [
         (r["doc_id"], r["score"])
         for r in batch.where("query_id = 0").select("doc_id", "score").collect()
     ]
     assert got == exhaustive
-    if len(missing_per_call) > 2:  # hot batch path taken
-        assert "tok1" not in missing_per_call[2]
+    assert len(missing_per_call) == 3
+    assert "tok1" not in missing_per_call[2]
 
     # budget exhausted → correct but uncached
     monkeypatch.setattr(type(si), "SPAN_META_MEMO_MAX_ROWS", 0)
     si2 = SparkIndex(spark, d)
     monkeypatch.setattr(type(si2), "_span_meta", spy)
-    a = [(r["doc_id"], r["score"])
-         for r in si2.bm25_topk(q, k, mode="distributed").collect()]
-    b = [(r["doc_id"], r["score"])
-         for r in si2.bm25_topk(q, k, mode="distributed").collect()]
+    a = _topk(si2, q, k, path="pruned")
+    b = _topk(si2, q, k, path="pruned")
     assert a == b == exhaustive
     assert missing_per_call[-1] == ["tok1", "tok2", "tok9"]  # nothing cached
 
@@ -636,17 +631,17 @@ def test_result_cache_zero_jobs_on_repeat(spark, tmp_path, monkeypatch):
     IndexBuilder(d, span=32).build(docs)
 
     calls: list[tuple] = []
-    impl = SparkIndex._bm25_topk_impl
+    core = SparkIndex._topk_rows
 
-    def spy(self, query, k=10, field="text", prune=True, mode="auto"):
-        calls.append((query, k))
-        return impl(self, query, k, field, prune, mode)
+    def spy(self, qterms_list, k, field):
+        calls.append((qterms_list, k))
+        return core(self, qterms_list, k, field)
 
-    monkeypatch.setattr(SparkIndex, "_bm25_topk_impl", spy)
+    monkeypatch.setattr(SparkIndex, "_topk_rows", spy)
 
     plain = SparkIndex(spark, d)
     want = [(r["doc_id"], r["score"]) for r in plain.bm25_topk("tok1 tok2", 5).collect()]
-    assert len(calls) == 2 or len(calls) == 1  # uncached: every call hits impl
+    assert len(calls) == 1  # uncached: every call hits the scorer
     n0 = len(calls)
     plain.bm25_topk("tok1 tok2", 5).collect()
     assert len(calls) == n0 + 1  # still uncached by default
@@ -682,12 +677,7 @@ def test_memo_caches_are_thread_safe(spark, tmp_path, monkeypatch):
 
     # driver-side stand-ins: no Spark work, so threads interleave at
     # dict-operation granularity and the race window is actually hit
-    monkeypatch.setattr(
-        idx, "_bm25_topk_impl",
-        lambda query, k, field, prune, mode: type(
-            "R", (), {"collect": staticmethod(lambda: [])}
-        )(),
-    )
+    monkeypatch.setattr(idx, "_topk_rows", lambda qterms_list, k, field: [])
     monkeypatch.setattr(idx, "_topk_df", lambda rows: rows)
 
     errors: list[BaseException] = []

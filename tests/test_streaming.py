@@ -9,6 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from neosearch_spark import fts
 from neosearch_spark.build import IndexBuilder
 from neosearch_spark.docids import assign_doc_ids
 from neosearch_spark.query import SparkIndex
@@ -54,22 +55,64 @@ def test_stats_updated(setup):
     assert abs(merged.avgdl - full.avgdl) < 1e-9
 
 
+def _rows(idx, q):
+    return [(r["doc_id"], round(r["score"], 9)) for r in idx.bm25_topk(q, 10).collect()]
+
+
 def test_bm25_identity_after_compaction(setup):
     full, merged, _ = setup
     for q in ["tok1 tok3 tok17", "tok2 tok5"]:
-        a = [(r["doc_id"], round(r["score"], 9)) for r in full.bm25_topk(q, 10, prune=False).collect()]
-        b = [(r["doc_id"], round(r["score"], 9)) for r in merged.bm25_topk(q, 10, prune=False).collect()]
-        assert a == b, q
+        assert _rows(full, q) == _rows(merged, q), q
 
 
-def test_wand_lossless_with_mixed_era_blocks(setup):
+def test_wand_lossless_with_mixed_era_blocks(setup, monkeypatch):
+    """avgdl changed between the base build and compaction, so the
+    compacted index mixes blocks encoded under different avgdls:
+    their stale enc_avgdl bounds must still prune losslessly.  The
+    queries are forced hot (this corpus is far under the local
+    posting cap) and the pruned path must have read mixed-era
+    bounds."""
     _, merged, _ = setup
-    # avgdl changed between base build and compaction → stale
-    # enc_avgdl bounds must still prune losslessly
-    for q in ["tok1 tok3 tok17", "tok1"]:
-        ex = [(r["doc_id"], round(r["score"], 9)) for r in merged.bm25_topk(q, 10, prune=False).collect()]
-        pr = [(r["doc_id"], round(r["score"], 9)) for r in merged.bm25_topk(q, 10, prune=True).collect()]
-        assert ex == pr, q
+    local = {q: _rows(merged, q) for q in ["tok1 tok3 tok17", "tok1"]}
+
+    bounds: list[dict] = []
+    orig = SparkIndex._span_meta
+
+    def spy(self, uniq, field):
+        out = orig(self, uniq, field)
+        bounds.append(out)
+        return out
+
+    monkeypatch.setattr(SparkIndex, "_span_meta", spy)
+    monkeypatch.setattr(SparkIndex, "LOCAL_SCORE_MAX_POSTINGS", 0)
+    for q, want in local.items():
+        bounds.clear()
+        pr = _rows(merged, q)
+        assert len(bounds) == 1, "the pruned (WAND) path must run"
+        eras = {a for spans in bounds[0].values() for _, _, a in spans}
+        assert len(eras) > 1 and any(a != merged.avgdl for a in eras), (q, eras)
+        with monkeypatch.context() as mp:
+            mp.setattr(SparkIndex, "META_COLLECT_CAP", 0)
+            ex = _rows(merged, q)
+        assert pr == ex == want, q
+
+
+def test_one_token_phrase_confirms_against_doc_store(setup):
+    """A streamed-then-compacted doc has postings but no doc-store
+    row; every phrase, one token or many, answers from the doc store
+    like the direct scan over it."""
+    _, merged, docs = setup
+    w = "tok1"
+    streamed = {
+        r["doc_id"]
+        for r in docs.where(F.col("doc_id") >= SPLIT).select("doc_id", "text").collect()
+        if w in r["text"].strip(" ").lower().split(" ")
+    }
+    # premise: the token is in streamed docs' postings
+    assert streamed & {r["doc_id"] for r in merged.term_docs(w).collect()}
+    got = [r["doc_id"] for r in merged.phrase_docs(w).collect()]
+    want = [r["doc_id"] for r in fts.phrase_docs(merged.docs, w).collect()]
+    assert got == want and got
 
 
 def test_windowed_event_counts_streaming(spark, tmp_path):
