@@ -126,6 +126,27 @@ def decode_postings(buf: bytes) -> np.ndarray:
     return np.cumsum(deltas, dtype=np.uint64).astype(np.int64)
 
 
+def decode_block_batch(n_docs: np.ndarray, docs_enc, tfs_enc=None, dls_enc=None):
+    """A batch of blocks → (doc_ids int64, tfs, dls) posting arrays in
+    block order (tfs/dls uint64, or None when their buffers are not
+    given).
+
+    Every buffer of a column is concatenated and varint-decoded ONCE
+    (buffers are self-delimiting — every value ends on a clear
+    continuation bit), then the per-block delta chains are rebased
+    with one cumsum + repeat.  No per-block Python loop."""
+    n_docs = np.asarray(n_docs, dtype=np.int64)
+    deltas = _varint_decode(b"".join(docs_enc)).astype(np.int64)
+    cum = np.cumsum(deltas)
+    starts = np.concatenate(([0], np.cumsum(n_docs)[:-1]))
+    # rebase each block's running sum to start at its own absolute
+    # first docID (delta chains reset per block)
+    doc_ids = cum - np.repeat(cum[starts] - deltas[starts], n_docs)
+    tfs = None if tfs_enc is None else _varint_decode(b"".join(tfs_enc))
+    dls = None if dls_enc is None else _varint_decode(b"".join(dls_enc))
+    return doc_ids, tfs, dls
+
+
 def encode_tfs(tfs: np.ndarray) -> bytes:
     """Varint encode term frequencies (no delta — small values)."""
     return _varint_encode(np.asarray(tfs, dtype=np.uint64))

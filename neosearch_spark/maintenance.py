@@ -1,19 +1,25 @@
-"""Index maintenance: row-level document deletion and crash-safe
-multi-table swaps.
+"""Index maintenance: row-level document writes (delete, upsert,
+merge) and crash-safe multi-table swaps.
 
-The reference supports key deletion at the store layer
-(``/root/reference/lib/neosearch/store/goleveldb/writer.go:54-65``)
-and engine layer (``/root/reference/lib/neosearch/engine/engine.go:
-148-150``); this module supplies the distributed successor: remove a
-set of doc_ids from a built index — the natural follow-through to
-dedup ("now drop the losers from the index").
+The reference has one write primitive, a store-level key write or
+removal (``lib/neosearch/store/goleveldb/writer.go:54-65``), and
+re-``Add`` writes on top of it
+(``lib/neosearch/index/index.go:123-160``).  This module has one
+document write too, ``_write_docs_locked``: remove a set of doc_ids,
+add a batch of docs.  ``upsert_docs`` removes the batch's own ids and
+adds the batch; ``delete_docs`` is an upsert with an empty batch
+(Lucene's ``updateDocument`` is likewise delete + add);
+``merge_indexes`` upserts another index's doc store.  Every write
+folds pending committed stream deltas first (``compact_deltas`` stays
+separate: it merges additively and has no doc-store rows).
 
 Scale design — BOTH compute and I/O are O(touched), never O(corpus):
 - The affected (field, term, span) posting groups are derived from
-  the DELETED DOCS' OWN CONTENT (one occurrence-stream pass over the
-  d deleted rows — the same analyzer the build ran), so only groups
-  that can actually contain a deleted posting are rebuilt; every
-  other block carries over untouched.
+  the REMOVED DOCS' OLD CONTENT ∪ the BATCH'S NEW CONTENT (one
+  occurrence-stream pass over those rows — the same analyzer the
+  build ran), so only groups that can actually change are rebuilt;
+  every other block carries over untouched.  Streamed docs (postings
+  but no doc-store row) fall back to their whole spans.
 - The index's bucketed block layout (build.py: term-range ``bucket=``
   directories) turns that into partition-scoped WRITES: only the
   bucket directories containing affected terms are rewritten
@@ -24,11 +30,12 @@ Scale design — BOTH compute and I/O are O(touched), never O(corpus):
   for an Iceberg dynamic partition overwrite; the reference's delete
   is O(1) per key (``store/goleveldb/writer.go:54-65``), ours is
   O(touched partitions) per batch.
-- Corpus stats update INCREMENTALLY (old totals minus the deleted
-  docs' count/token-sum — exact integer arithmetic, no corpus scan);
-  ``max_dl`` keeps its old value (still a valid upper bound, which is
-  all its consumers need).
-- Deleted ids apply as an anti-join against the decoded tf stream —
+- Corpus stats update INCREMENTALLY (``stage_stats``: old totals
+  minus the removed docs' count/token-sum plus the batch's — exact
+  integer arithmetic, no corpus scan); ``max_dl`` is max(old, batch),
+  so a delete keeps the old value (still a valid upper bound, which
+  is all its consumers need).
+- Removed ids apply as an anti-join against the decoded tf stream —
   never a driver-side list.
 - All rewritten directories materialize to tmp first, then swap
   under a manifest tombstone: the manifest marks ``swap_in_progress``
@@ -52,8 +59,6 @@ import json
 import os
 import shutil
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -245,45 +250,23 @@ def partition_swap_pairs(
     ]
 
 
-def _explode_blocks_stream(blocks: DataFrame) -> DataFrame:
-    """Decode blocks back to the (field, term, doc_id, tf, dl)
-    stream, fully vectorized: all block buffers in an Arrow batch are
-    concatenated and varint-decoded ONCE (buffers self-delimit), then
-    the per-block delta chains are rebased with one cumsum + repeat —
-    the same pattern as query._decode, no per-block Python loop."""
-    from .codec import _varint_decode
-
-    def explode(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            n_docs = pdf["n_docs"].to_numpy(dtype=np.int64)
-            deltas = _varint_decode(b"".join(pdf["docs_enc"].tolist()))
-            cum = np.cumsum(deltas.astype(np.int64))
-            starts = np.concatenate(([0], np.cumsum(n_docs)[:-1]))
-            base = np.repeat(
-                cum[starts] - deltas[starts].astype(np.int64), n_docs
-            )
-            yield pd.DataFrame(
-                {
-                    "field": np.repeat(pdf["field"].to_numpy(), n_docs),
-                    "term": np.repeat(pdf["term"].to_numpy(), n_docs),
-                    "doc_id": cum - base,
-                    "tf": _varint_decode(
-                        b"".join(pdf["tfs_enc"].tolist())
-                    ).astype(np.int64),
-                    "dl": _varint_decode(
-                        b"".join(pdf["dls_enc"].tolist())
-                    ).astype(np.int64),
-                }
-            )
-
-    return blocks.select(
-        "field", "term", "n_docs", "docs_enc", "tfs_enc", "dls_enc"
-    ).mapInPandas(
-        explode,
-        schema="field string, term string, doc_id long, tf long, dl long",
+def touched_blocks(
+    spark: SparkSession, index_dir: str, affected: DataFrame
+) -> tuple[list[int], DataFrame]:
+    """(touched bucket list, current blocks of the ``affected``
+    (field, term, span_id, bucket) groups).  The scan is
+    bucket-pruned: untouched bucket directories are never read."""
+    buckets = sorted(
+        r["bucket"] for r in affected.select("bucket").distinct().collect()
     )
+    blocks = read_blocks(spark, index_dir)
+    scan = (
+        blocks.where(F.col("bucket").isin(buckets))
+        if buckets
+        else blocks.where(F.lit(False))
+    )
+    keys = ["field", "term", "span_id"]
+    return buckets, scan.join(affected.select(*keys), keys)
 
 
 def rebuild_touched_buckets(
@@ -294,18 +277,19 @@ def rebuild_touched_buckets(
     avgdl: float,
     span: int,
     boundaries: list[str],
-    bucket_list: list[int] | None = None,
-) -> tuple[list[tuple[str, str]], list[int]]:
-    """Shared partition-scoped block/terms rewrite for delete and
-    compaction.
+    bucket_list: list[int],
+) -> list[tuple[str, str]]:
+    """Shared partition-scoped block/terms rewrite for the document
+    write and compaction.
 
     ``affected`` = the (field, term, span_id) posting groups whose
-    content changes; ``surviving_tf`` = the new (field, term, doc_id,
-    tf, dl, span_id) stream for exactly those groups.  Only the
-    bucket directories containing affected terms are rewritten
+    content changes, in the buckets ``bucket_list`` (see
+    ``touched_blocks``); ``surviving_tf`` = the new (field, term,
+    doc_id, tf, dl, span_id) stream for exactly those groups.  Only
+    the touched bucket directories are rewritten
     (carried-blocks-in-bucket ∪ re-encoded groups); every other
     bucket directory of blocks/ and terms/ is never read or written.
-    Returns (swap pairs, touched bucket list)."""
+    Returns the swap pairs."""
     from .build import (
         BLOCK_SCHEMA,
         arrow_carry_encoder,
@@ -314,20 +298,11 @@ def rebuild_touched_buckets(
         term_bucket_expr,
     )
 
-    # callers that already collected the distinct buckets pass them
-    # in — recollecting here would cost a redundant Spark job
-    touched_buckets = (
-        sorted(bucket_list)
-        if bucket_list is not None
-        else sorted(
-            r["bucket"] for r in affected.select("bucket").distinct().collect()
-        )
-    )
-    if not touched_buckets:
-        return [], []
+    if not bucket_list:
+        return []
 
     blocks = read_blocks(spark, index_dir)
-    bl_t = blocks.where(F.col("bucket").isin(touched_buckets))
+    bl_t = blocks.where(F.col("bucket").isin(bucket_list))
     keys = affected.select("field", "term", "span_id")
     carried = bl_t.join(keys, ["field", "term", "span_id"], "left_anti")
 
@@ -352,7 +327,7 @@ def rebuild_touched_buckets(
     blocks_tmp = os.path.join(index_dir, "blocks") + "_tmp"
     (
         carried.unionByName(rebuilt)
-        .repartition(len(touched_buckets), "bucket")
+        .repartition(len(bucket_list), "bucket")
         .sortWithinPartitions("field", "term", "span_id")
         .write.mode("overwrite")
         .option("parquet.block.size", 8 * 1024 * 1024)
@@ -378,12 +353,33 @@ def rebuild_touched_buckets(
         .partitionBy("bucket")
         .parquet(terms_tmp)
     )
-    pairs = partition_swap_pairs(
-        index_dir, "blocks", blocks_tmp, "bucket", touched_buckets
+    return partition_swap_pairs(
+        index_dir, "blocks", blocks_tmp, "bucket", bucket_list
     ) + partition_swap_pairs(
-        index_dir, "terms", terms_tmp, "bucket", touched_buckets
+        index_dir, "terms", terms_tmp, "bucket", bucket_list
     )
-    return pairs, touched_buckets
+
+
+def stage_stats(
+    spark: SparkSession, index_dir: str, d_docs: int, d_tokens: int, max_dl: int
+) -> tuple[int, float]:
+    """Write the corpus-stats row for the old totals plus (``d_docs``,
+    ``d_tokens``) — exact integer arithmetic, no corpus scan — to
+    ``stats_tmp`` for the caller's swap.  ``max_dl`` keeps the larger
+    of the old value and the given one: after a removal the old value
+    is still a valid upper bound, which is all its consumers need.
+    Returns the new (n_docs, avgdl)."""
+    old = spark.read.parquet(os.path.join(index_dir, "stats")).collect()[0]
+    n = int(old["n_docs"]) + d_docs
+    t = int(old["total_tokens"]) + d_tokens
+    avgdl = (t / n) if n else 0.0
+    spark.createDataFrame(
+        spark.sparkContext.parallelize(
+            [(n, avgdl, t, max(int(old["max_dl"]), max_dl))], 1
+        ),
+        "n_docs long, avgdl double, total_tokens long, max_dl long",
+    ).write.mode("overwrite").parquet(os.path.join(index_dir, "stats_tmp"))
+    return n, avgdl
 
 
 def read_blocks(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -451,196 +447,22 @@ def delete_docs(
     Returns counters {n_deleted, touched_spans, n_blocks_touched,
     touched_buckets, touched_doc_parts}.
 
-    O(touched) end to end: the affected posting groups come from the
-    deleted docs' own analyzed content, and only the bucket/doc_part
-    directories containing them are rewritten (see module docstring).
-    ``n_deleted`` counts rows actually removed (absent ids don't
-    count).  Idempotent: re-deleting absent ids touches no blocks and
-    rewrites the ids' doc_part directories to identical content.
-    Single-writer: concurrent maintenance on one index is excluded by
-    ``writer_lock`` (reference singleton-writer semantics)."""
+    A delete is an upsert with an empty batch: the same write
+    (``_write_docs_locked``) removes the ids and adds nothing, so it
+    folds pending committed stream deltas first like ``upsert_docs``
+    (a streamed, not yet compacted doc is deleted, not resurrected by
+    the next compaction) and is O(touched) end to end (see module
+    docstring).  ``n_deleted`` counts rows actually removed (absent
+    ids don't count).  Idempotent: re-deleting absent ids touches no
+    blocks and rewrites the ids' doc_part directories to identical
+    content.  Single-writer: concurrent maintenance on one index is
+    excluded by ``writer_lock`` (reference singleton-writer
+    semantics)."""
+    no_docs = read_docs(spark, index_dir).drop("dl", "doc_part").where(F.lit(False))
     with writer_lock(index_dir):
-        return _delete_docs_locked(spark, index_dir, ids, crash_after)
-
-
-def _delete_docs_locked(
-    spark: SparkSession,
-    index_dir: str,
-    ids: DataFrame,
-    crash_after: int | None = None,
-) -> dict:
-    from .build import _occurrence_stream
-
-    m = _load_manifest(index_dir)
-    check_not_torn(m, index_dir)
-    p = m["params"]
-    span = int(p["span"])
-    boundaries = p.get("bucket_boundaries", [])
-    if "docs_span" not in p:
-        raise RuntimeError(
-            "index predates the partitioned doc-store layout "
-            "(format v9, docs_span param) — rebuild it before using "
-            "partition-scoped delete"
+        return _write_docs_locked(
+            spark, index_dir, ids, no_docs, "delete_docs", crash_after
         )
-    docs_span = int(p["docs_span"])
-    analyzed_fields = list(p["analyzed_fields"])
-
-    ids = ids.select(F.col("doc_id").cast("long")).distinct()
-
-    docs = read_docs(spark, index_dir)
-    deleted_docs = docs.join(ids, "doc_id", "semi").persist()
-
-    # streamed docs (postings but no doc-store row) live only in
-    # doc_len_extra; their content is unknown, so their spans fall
-    # back to span-granular group rebuild
-    extra_path = os.path.join(index_dir, "doc_len_extra")
-    extra_deleted = None
-    if os.path.exists(extra_path):
-        extra_deleted = (
-            read_extra(spark, index_dir).join(ids, "doc_id", "semi").persist()
-        )
-
-    # --- affected (field, term, span) groups from the deleted docs'
-    # own content — O(d · terms/doc), no index probe.  Date-metadata
-    # fields re-parse exactly like the build did so their epoch terms
-    # match.
-    from .build import apply_date_fields, apply_typed_fields, index_fields
-
-    date_fields = p.get("date_fields") or {}
-    typed_fields = p.get("typed_fields") or {}
-    exact_all = index_fields(p)[len(analyzed_fields):]
-    occ = _occurrence_stream(
-        apply_typed_fields(apply_date_fields(deleted_docs, date_fields), typed_fields),
-        analyzed_fields,
-        exact_all,
-        include_whole=True,
-    )
-    affected = occ.select(
-        "field", "term", F.expr(f"doc_id div {span}").alias("span_id")
-    ).distinct()
-    blocks = read_blocks(spark, index_dir)
-    if extra_deleted is not None:
-        extra_spans = [
-            r["s"]
-            for r in extra_deleted.select(
-                F.expr(f"doc_id div {span}").alias("s")
-            ).distinct().collect()
-        ]
-        if extra_spans:
-            affected = affected.unionByName(
-                blocks.where(F.col("span_id").isin(extra_spans))
-                .select("field", "term", "span_id")
-                .distinct()
-            ).distinct()
-
-    # --- incremental stats (exact integer arithmetic, no corpus scan)
-    old = spark.read.parquet(os.path.join(index_dir, "stats")).collect()[0]
-    dstat = deleted_docs.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("t")
-    ).collect()[0]
-    n_del, t_del = int(dstat["n"]), int(dstat["t"] or 0)
-    if extra_deleted is not None:
-        estat = extra_deleted.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("dl").alias("t")
-        ).collect()[0]
-        n_del += int(estat["n"])
-        t_del += int(estat["t"] or 0)
-    n_new = int(old["n_docs"]) - n_del
-    t_new = int(old["total_tokens"]) - t_del
-    avgdl = (t_new / n_new) if n_new else 0.0
-    stats_tmp = os.path.join(index_dir, "stats") + "_tmp"
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(n_new, avgdl, t_new, int(old["max_dl"]))], 1
-        ),
-        "n_docs long, avgdl double, total_tokens long, max_dl long",
-    ).write.mode("overwrite").parquet(stats_tmp)
-
-    # --- blocks/terms: partition-scoped rewrite of touched buckets.
-    # The scan feeding the rebuild is itself bucket-pruned: untouched
-    # bucket directories are never even read.
-    from .build import term_bucket_expr
-
-    affected = affected.withColumn(
-        "bucket", term_bucket_expr(F.col("term"), boundaries)
-    ).persist()
-    bucket_list = sorted(
-        r["bucket"] for r in affected.select("bucket").distinct().collect()
-    )
-    bl_scan = (
-        blocks.where(F.col("bucket").isin(bucket_list))
-        if bucket_list
-        else blocks.where(F.lit(False))
-    )
-    keys = affected.select("field", "term", "span_id")
-    touched_blocks = bl_scan.join(keys, ["field", "term", "span_id"])
-    n_touched_blocks = touched_blocks.count()
-    surviving_tf = (
-        _explode_blocks_stream(touched_blocks)
-        .join(ids, "doc_id", "left_anti")
-        .withColumn("span_id", F.expr(f"doc_id div {span}"))
-    )
-    pairs, touched_buckets = rebuild_touched_buckets(
-        spark, index_dir, affected, surviving_tf, avgdl, span, boundaries,
-        bucket_list=bucket_list,
-    )
-    affected.unpersist()
-
-    # --- doc store: rewrite only the doc_part dirs containing ids
-    touched_parts = sorted(
-        r["p"]
-        for r in ids.select(
-            F.expr(f"doc_id div {docs_span}").alias("p")
-        ).distinct().collect()
-    )
-    docs_tmp = os.path.join(index_dir, "docs") + "_tmp"
-    (
-        docs.where(F.col("doc_part").isin(touched_parts))
-        .join(ids, "doc_id", "left_anti")
-        .sortWithinPartitions("doc_part", "doc_id")
-        .write.mode("overwrite")
-        .partitionBy("doc_part")
-        .parquet(docs_tmp)
-    )
-    pairs += partition_swap_pairs(
-        index_dir, "docs", docs_tmp, "doc_part", touched_parts
-    )
-    if extra_deleted is not None:
-        extra_tmp = extra_path + "_tmp"
-        (
-            read_extra(spark, index_dir)
-            .where(F.col("doc_part").isin(touched_parts))
-            .join(ids, "doc_id", "left_anti")
-            .write.mode("overwrite")
-            .partitionBy("doc_part")
-            .parquet(extra_tmp)
-        )
-        pairs += partition_swap_pairs(
-            index_dir, "doc_len_extra", extra_tmp, "doc_part", touched_parts
-        )
-    pairs.append(("stats", stats_tmp))
-
-    counters = {
-        "n_deleted": n_del,
-        "touched_spans": int(
-            ids.select(F.expr(f"doc_id div {span}")).distinct().count()
-        ),
-        "n_blocks_touched": int(n_touched_blocks),
-        "touched_buckets": len(touched_buckets),
-        "touched_doc_parts": len(touched_parts),
-    }
-    deleted_docs.unpersist()
-    if extra_deleted is not None:
-        extra_deleted.unpersist()
-    swap_tables(
-        index_dir,
-        pairs,
-        op="delete_docs",
-        crash_after=crash_after,
-        delete_docs=counters,
-    )
-    _cleanup_tmp_roots(index_dir)
-    return counters
 
 
 def upsert_docs(
@@ -657,31 +479,27 @@ def upsert_docs(
     (``lib/neosearch/index/index.go:123-160``) overwrites the doc
     store but blindly MergeSet-appends to the posting lists, leaving
     the old content's terms pointing at the doc — stale postings.
-    This is the corrected distributed successor: affected posting
-    groups derive from the union of the replaced docs' OLD analyzed
-    content and the batch's NEW content, so replaced postings are
-    dropped exactly and only touched ``bucket=`` / ``doc_part=``
-    directories are rewritten (O(touched) compute and I/O, same
-    contract as ``delete_docs``).
+    This is the corrected distributed successor: it removes the
+    batch's ids and adds the batch in one write
+    (``_write_docs_locked``, shared with ``delete_docs``), so replaced
+    postings are dropped exactly and only touched ``bucket=`` /
+    ``doc_part=`` directories are rewritten (O(touched) compute and
+    I/O, see module docstring).
 
     ``new_docs`` must carry ``doc_id`` plus the same field columns
     the index was built from.  Pending COMMITTED streaming deltas are
-    folded in first (upsert is defined on a compacted index — a
-    replaced id hiding in ``tf_delta`` would otherwise resurrect at
-    the next compaction).  That guarantee covers what is durable on
-    disk; an epoch still unacknowledged in a LIVE stream's checkpoint
-    can replay after this upsert and re-apply its old content — run
-    maintenance with the stream drained (single-writer contract, see
-    ``streaming.delta_sink``).  Returns counters {n_upserted, n_replaced,
-    touched_spans, n_blocks_touched, touched_buckets,
-    touched_doc_parts}."""
+    folded in first (a replaced id hiding in ``tf_delta`` would
+    otherwise resurrect at the next compaction).  That guarantee
+    covers what is durable on disk; an epoch still unacknowledged in
+    a LIVE stream's checkpoint can replay after this upsert and
+    re-apply its old content — run maintenance with the stream
+    drained (single-writer contract, see ``streaming.delta_sink``).
+    Returns counters {n_upserted, n_replaced, touched_spans,
+    n_blocks_touched, touched_buckets, touched_doc_parts}."""
     with writer_lock(index_dir):
-        if os.path.exists(os.path.join(index_dir, "tf_delta")):
-            from .streaming import _compact_deltas_locked
-
-            _compact_deltas_locked(spark, index_dir, None)
-        return _upsert_docs_locked(spark, index_dir, new_docs, crash_after)
-
+        return _write_docs_locked(
+            spark, index_dir, None, new_docs, "upsert_docs", crash_after
+        )
 
 _SNAPSHOT_TABLES = (
     "docs", "doc_len_extra", "blocks", "terms", "stats", "counters",
@@ -816,22 +634,30 @@ def merge_indexes(spark: SparkSession, dst_dir: str, src_dir: str) -> dict:
     return upsert_docs(spark, dst_dir, src_docs)
 
 
-def _upsert_docs_locked(
+def _write_docs_locked(
     spark: SparkSession,
     index_dir: str,
-    new_docs: DataFrame,
+    ids: DataFrame | None,
+    batch: DataFrame,
+    op: str,
     crash_after: int | None = None,
 ) -> dict:
+    """The one document write (caller holds the writer lock): remove
+    ``ids`` (None: the batch's own ids), add ``batch`` (doc-store rows
+    without ``dl``/``doc_part``; empty for a delete), in one
+    tombstoned partition-scoped swap.  ``op`` ("delete_docs" /
+    "upsert_docs") names the manifest entry and the counter keys."""
     from .build import (
         _occurrence_stream,
         _tf_stream,
         apply_date_fields,
         apply_typed_fields,
         check_doc_id_bounds,
-        doc_len_col,
         index_fields,
+        primary_dl_col,
         term_bucket_expr,
     )
+    from .query import decode_blocks
 
     m = _load_manifest(index_dir)
     check_not_torn(m, index_dir)
@@ -842,7 +668,7 @@ def _upsert_docs_locked(
         raise RuntimeError(
             "index predates the partitioned doc-store layout "
             "(format v9, docs_span param) — rebuild it before using "
-            "partition-scoped upsert"
+            f"partition-scoped {op}"
         )
     docs_span = int(p["docs_span"])
     analyzed_fields = list(p["analyzed_fields"])
@@ -850,35 +676,46 @@ def _upsert_docs_locked(
     typed_fields = p.get("typed_fields") or {}
     exact_all = index_fields(p)[len(analyzed_fields):]
 
-    new_docs = new_docs.withColumn("doc_id", F.col("doc_id").cast("long"))
-    from .build import primary_dl_col
+    # pending COMMITTED stream deltas fold first: a removed id hiding
+    # in tf_delta would otherwise resurrect at the next compaction
+    if os.path.exists(os.path.join(index_dir, "tf_delta")):
+        from .streaming import _compact_deltas_locked
 
-    batch = new_docs.withColumn(
-        "dl", primary_dl_col(new_docs, analyzed_fields[0])
+        _compact_deltas_locked(spark, index_dir, None)
+
+    batch = batch.withColumn("doc_id", F.col("doc_id").cast("long"))
+    batch = batch.withColumn(
+        "dl", primary_dl_col(batch, analyzed_fields[0])
     ).persist()
+    # an upsert's ids come from the persisted batch, not its source
+    # plan: the many joins on ids then never re-evaluate the source
+    # (that cost ~1 s per 100-doc upsert on a 4-vCPU host)
+    ids = (
+        batch.select("doc_id")
+        if ids is None
+        else ids.select(F.col("doc_id").cast("long"))
+    ).distinct()
     # same bounds guards as IndexBuilder.build (ADVICE r3): an upsert
     # batch must fail as loudly as a build would
     check_doc_id_bounds(batch, docs_span)
-    ids = batch.select("doc_id").distinct()
 
     docs = read_docs(spark, index_dir)
-    replaced_docs = docs.join(ids, "doc_id", "semi").persist()
+    removed_docs = docs.join(ids, "doc_id", "semi").persist()
 
     # streamed docs (postings but no doc-store row): content unknown,
-    # so replacing one falls back to span-granular group rebuild —
-    # same shape as delete_docs
+    # so removing one falls back to span-granular group rebuild
     extra_path = os.path.join(index_dir, "doc_len_extra")
-    extra_replaced = None
+    extra_removed = None
     if os.path.exists(extra_path):
-        extra_replaced = (
+        extra_removed = (
             read_extra(spark, index_dir).join(ids, "doc_id", "semi").persist()
         )
 
-    # --- affected groups: OLD content of replaced docs ∪ NEW batch
+    # --- affected groups: OLD content of removed docs ∪ NEW batch
     # content (both through the build's own analyzer, so terms match
-    # the persisted postings exactly)
+    # the persisted postings exactly) — O(touched), no index probe
     old_occ = _occurrence_stream(
-        apply_typed_fields(apply_date_fields(replaced_docs, date_fields), typed_fields),
+        apply_typed_fields(apply_date_fields(removed_docs, date_fields), typed_fields),
         analyzed_fields,
         exact_all,
         include_whole=True,
@@ -895,33 +732,32 @@ def _upsert_docs_locked(
         .unionByName(new_tf.select("field", "term", "span_id"))
         .distinct()
     )
-    blocks = read_blocks(spark, index_dir)
-    if extra_replaced is not None:
+    if extra_removed is not None:
         extra_spans = [
             r["s"]
-            for r in extra_replaced.select(
+            for r in extra_removed.select(
                 F.expr(f"doc_id div {span}").alias("s")
             ).distinct().collect()
         ]
         if extra_spans:
             affected = affected.unionByName(
-                blocks.where(F.col("span_id").isin(extra_spans))
+                read_blocks(spark, index_dir)
+                .where(F.col("span_id").isin(extra_spans))
                 .select("field", "term", "span_id")
                 .distinct()
             ).distinct()
 
-    # --- incremental stats: old totals − replaced + batch
-    old = spark.read.parquet(os.path.join(index_dir, "stats")).collect()[0]
-    rstat = replaced_docs.agg(
+    # --- incremental stats: old totals − removed + batch
+    rstat = removed_docs.agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("t")
     ).collect()[0]
-    n_rep, t_rep = int(rstat["n"]), int(rstat["t"] or 0)
-    if extra_replaced is not None:
-        estat = extra_replaced.agg(
+    n_rem, t_rem = int(rstat["n"]), int(rstat["t"] or 0)
+    if extra_removed is not None:
+        estat = extra_removed.agg(
             F.count(F.lit(1)).alias("n"), F.sum("dl").alias("t")
         ).collect()[0]
-        n_rep += int(estat["n"])
-        t_rep += int(estat["t"] or 0)
+        n_rem += int(estat["n"])
+        t_rem += int(estat["t"] or 0)
     bstat = batch.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("dl").alias("t"),
@@ -931,56 +767,41 @@ def _upsert_docs_locked(
     n_batch, t_batch = int(bstat["n"]), int(bstat["t"] or 0)
     if n_batch != int(bstat["nd"]):
         batch.unpersist()
-        replaced_docs.unpersist()
-        if extra_replaced is not None:
-            extra_replaced.unpersist()
+        removed_docs.unpersist()
+        if extra_removed is not None:
+            extra_removed.unpersist()
         raise ValueError(
             f"upsert batch has duplicate doc_ids ({n_batch} rows, "
             f"{int(bstat['nd'])} distinct) — a distributed batch has no "
             "row order, so last-write-wins is undefined; dedupe the "
             "batch first"
         )
-    n_new = int(old["n_docs"]) - n_rep + n_batch
-    t_new = int(old["total_tokens"]) - t_rep + t_batch
-    max_dl = max(int(old["max_dl"]), int(bstat["m"] or 0))
-    avgdl = (t_new / n_new) if n_new else 0.0
-    stats_tmp = os.path.join(index_dir, "stats") + "_tmp"
-    spark.createDataFrame(
-        spark.sparkContext.parallelize([(n_new, avgdl, t_new, max_dl)], 1),
-        "n_docs long, avgdl double, total_tokens long, max_dl long",
-    ).write.mode("overwrite").parquet(stats_tmp)
+    _, avgdl = stage_stats(
+        spark, index_dir, n_batch - n_rem, t_batch - t_rem, int(bstat["m"] or 0)
+    )
 
-    # --- blocks/terms: drop replaced postings from touched groups,
-    # add the batch's postings, rewrite touched buckets only
+    # --- blocks/terms: drop removed postings from touched groups, add
+    # the batch's postings, rewrite touched buckets only
     affected = affected.withColumn(
         "bucket", term_bucket_expr(F.col("term"), boundaries)
     ).persist()
-    bucket_list = sorted(
-        r["bucket"] for r in affected.select("bucket").distinct().collect()
-    )
-    bl_scan = (
-        blocks.where(F.col("bucket").isin(bucket_list))
-        if bucket_list
-        else blocks.where(F.lit(False))
-    )
-    keys = affected.select("field", "term", "span_id")
-    touched_blocks = bl_scan.join(keys, ["field", "term", "span_id"])
-    n_touched_blocks = touched_blocks.count()
-    n_touched_spans = int(keys.select("span_id").distinct().count())
+    touched_buckets, old_blocks = touched_blocks(spark, index_dir, affected)
+    n_touched_blocks = old_blocks.count()
+    n_touched_spans = int(affected.select("span_id").distinct().count())
     surviving_tf = (
-        _explode_blocks_stream(touched_blocks)
+        decode_blocks(old_blocks, with_payload=True)
         .join(ids, "doc_id", "left_anti")
         .withColumn("span_id", F.expr(f"doc_id div {span}"))
         .unionByName(new_tf.select("field", "term", "doc_id", "tf", "dl", "span_id"))
     )
-    pairs, touched_buckets = rebuild_touched_buckets(
+    pairs = rebuild_touched_buckets(
         spark, index_dir, affected, surviving_tf, avgdl, span, boundaries,
-        bucket_list=bucket_list,
+        touched_buckets,
     )
     affected.unpersist()
 
-    # --- doc store: rewrite only the doc_part dirs containing batch
-    # ids — surviving old rows in those dirs ∪ the batch's new rows
+    # --- doc store: rewrite only the doc_part dirs containing the ids
+    # — surviving old rows in those dirs ∪ the batch's new rows
     touched_parts = sorted(
         r["p"]
         for r in ids.select(
@@ -1003,9 +824,9 @@ def _upsert_docs_locked(
     pairs += partition_swap_pairs(
         index_dir, "docs", docs_tmp, "doc_part", touched_parts
     )
-    # replaced streamed docs now have doc-store rows — drop them from
-    # doc_len_extra's touched dirs
-    if extra_replaced is not None:
+    # removed streamed docs leave doc_len_extra's touched dirs (a
+    # replaced one now has a doc-store row)
+    if extra_removed is not None:
         extra_tmp = extra_path + "_tmp"
         (
             read_extra(spark, index_dir)
@@ -1018,26 +839,25 @@ def _upsert_docs_locked(
         pairs += partition_swap_pairs(
             index_dir, "doc_len_extra", extra_tmp, "doc_part", touched_parts
         )
-    pairs.append(("stats", stats_tmp))
+    pairs.append(("stats", os.path.join(index_dir, "stats_tmp")))
 
-    counters = {
-        "n_upserted": n_batch,
-        "n_replaced": n_rep,
-        "touched_spans": n_touched_spans,
-        "n_blocks_touched": int(n_touched_blocks),
-        "touched_buckets": len(touched_buckets),
-        "touched_doc_parts": len(touched_parts),
-    }
-    replaced_docs.unpersist()
+    counters = (
+        {"n_deleted": n_rem}
+        if op == "delete_docs"
+        else {"n_upserted": n_batch, "n_replaced": n_rem}
+    )
+    counters.update(
+        touched_spans=n_touched_spans,
+        n_blocks_touched=int(n_touched_blocks),
+        touched_buckets=len(touched_buckets),
+        touched_doc_parts=len(touched_parts),
+    )
+    removed_docs.unpersist()
     batch.unpersist()
-    if extra_replaced is not None:
-        extra_replaced.unpersist()
+    if extra_removed is not None:
+        extra_removed.unpersist()
     swap_tables(
-        index_dir,
-        pairs,
-        op="upsert_docs",
-        crash_after=crash_after,
-        upsert_docs=counters,
+        index_dir, pairs, op=op, crash_after=crash_after, **{op: counters}
     )
     _cleanup_tmp_roots(index_dir)
     return counters

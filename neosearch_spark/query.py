@@ -40,10 +40,47 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .analyzer import analyze_query
-from .codec import decode_postings, decode_tfs
+from .codec import decode_block_batch, decode_postings, decode_tfs
 
 K1 = 1.2
 B = 0.75
+
+
+def decode_blocks(blocks: DataFrame, with_payload: bool = False) -> DataFrame:
+    """blocks → exploded (field, term, doc_id[, tf, dl]) rows, one
+    vectorized ``codec.decode_block_batch`` per Arrow batch.  The one
+    Spark-side block decoder: query operators, the postings export,
+    and every maintenance rewrite read blocks through it."""
+    schema = "field string, term string, doc_id long"
+    if with_payload:
+        schema += ", tf int, dl int"
+
+    def dec(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            if len(pdf) == 0:
+                continue
+            n_docs = pdf["n_docs"].to_numpy(dtype=np.int64)
+            ids, tfs, dls = decode_block_batch(
+                n_docs,
+                pdf["docs_enc"],
+                pdf["tfs_enc"] if with_payload else None,
+                pdf["dls_enc"] if with_payload else None,
+            )
+            d = {
+                "field": np.repeat(pdf["field"].to_numpy(), n_docs),
+                "term": np.repeat(pdf["term"].to_numpy(), n_docs),
+                "doc_id": ids,
+            }
+            if with_payload:
+                d["tf"] = tfs.astype(np.int32)
+                d["dl"] = dls.astype(np.int32)
+            yield pd.DataFrame(d)
+        # (empty partitions yield nothing — Spark fills the schema)
+
+    cols = ["field", "term", "n_docs", "docs_enc"]
+    if with_payload:
+        cols += ["tfs_enc", "dls_enc"]
+    return blocks.select(*cols).mapInPandas(dec, schema=schema)
 
 
 class SparkIndex:
@@ -195,53 +232,6 @@ class SparkIndex:
             )
         return dl
 
-    # ---------------- posting decode ----------------
-
-    def _decode(self, blocks: DataFrame, with_payload: bool = False) -> DataFrame:
-        """blocks → exploded (field, term, doc_id[, tf, dl]) rows.
-
-        Fully vectorized: all block buffers in an Arrow batch are
-        concatenated and varint-decoded ONCE (buffers are
-        self-delimiting — every value ends on a clear continuation
-        bit), then the per-block delta chains are rebased with one
-        cumsum + repeat.  No per-block Python loop."""
-        from .codec import _varint_decode
-
-        schema = "field string, term string, doc_id long"
-        if with_payload:
-            schema += ", tf int, dl int"
-
-        def dec(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                n_docs = pdf["n_docs"].to_numpy(dtype=np.int64)
-                deltas = _varint_decode(b"".join(pdf["docs_enc"].tolist()))
-                cum = np.cumsum(deltas.astype(np.int64))
-                starts = np.concatenate(([0], np.cumsum(n_docs)[:-1]))
-                # rebase each block's running sum to start at its own
-                # absolute first docID (delta chains reset per block)
-                base = np.repeat(cum[starts] - deltas[starts].astype(np.int64), n_docs)
-                d = {
-                    "field": np.repeat(pdf["field"].to_numpy(), n_docs),
-                    "term": np.repeat(pdf["term"].to_numpy(), n_docs),
-                    "doc_id": cum - base,
-                }
-                if with_payload:
-                    d["tf"] = _varint_decode(
-                        b"".join(pdf["tfs_enc"].tolist())
-                    ).astype(np.int32)
-                    d["dl"] = _varint_decode(
-                        b"".join(pdf["dls_enc"].tolist())
-                    ).astype(np.int32)
-                yield pd.DataFrame(d)
-            # (empty partitions yield nothing — Spark fills the schema)
-
-        cols = ["field", "term", "span_id", "n_docs", "docs_enc"]
-        if with_payload:
-            cols += ["tfs_enc", "dls_enc"]
-        return blocks.select(*cols).mapInPandas(dec, schema=schema)
-
     # ---------------- bucket pruning ----------------
 
     def _bucket_of(self, term: str) -> int:
@@ -278,14 +268,14 @@ class SparkIndex:
         (one vectorized decode per Arrow batch) — callers stream it
         (``toLocalIterator``) or keep it a DataFrame; never
         ``collect()`` it at scale."""
-        return self._decode(self.blocks, with_payload=with_payload)
+        return decode_blocks(self.blocks, with_payload=with_payload)
 
     def term_docs(self, term: str, field: str = "text") -> DataFrame:
         """FilterTermID analog (``filter.go:10-42``): docID-ascending."""
         b = self._bucket_terms(self.blocks, [term]).where(
             (F.col("field") == field) & (F.col("term") == term)
         )
-        return self._decode(b).select("doc_id").orderBy("doc_id")
+        return decode_blocks(b).select("doc_id").orderBy("doc_id")
 
     def and_docs(self, terms: list[str], field: str = "text") -> DataFrame:
         """Sorted-intersection AND (``search/search.go:75-106``) as a
@@ -303,7 +293,7 @@ class SparkIndex:
         b = self._bucket_terms(self.blocks, terms).where(
             (F.col("field") == field) & F.col("term").isin(terms)
         )
-        return self._decode(b).select("doc_id").distinct().orderBy("doc_id")
+        return decode_blocks(b).select("doc_id").distinct().orderBy("doc_id")
 
     def not_docs(
         self, include: list[str], exclude: list[str], field: str = "text"
@@ -336,7 +326,7 @@ class SparkIndex:
         b = self._bucket_prefix(self.blocks, prefix).where(
             (F.col("field") == field) & F.col("term").startswith(prefix)
         )
-        return self._decode(b).select("doc_id").distinct().orderBy("doc_id")
+        return decode_blocks(b).select("doc_id").distinct().orderBy("doc_id")
 
     def fuzzy_docs(
         self,
@@ -663,7 +653,7 @@ class SparkIndex:
             & F.col("span_id").between(lo // self.span, hi // self.span)
         )
         return (
-            self._decode(b)
+            decode_blocks(b)
             .where(F.col("doc_id").between(lo, hi))
             .select("doc_id")
             .orderBy("doc_id")
@@ -983,24 +973,24 @@ class SparkIndex:
         row_number window over (score desc, doc_id asc)) before the
         collect, so the driver's receipt does not grow with the
         number of spans scored."""
-        from .codec import _varint_decode
-
         span = self.span
         avgdl = self.avgdl
         q_items = sorted(queries_map.items())
 
-        def score(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        # unannotated on purpose: partial type hints make applyInPandas
+        # warn that it cannot infer the eval type; with none it takes
+        # the grouped-map type silently
+        def score(key, pdf):
             span_id = int(key[0])
             base = span_id * span
             pdf = pdf.sort_values(["term", "first_doc"], kind="mergesort")
             n_docs = pdf["n_docs"].to_numpy(dtype=np.int64)
-            deltas = _varint_decode(b"".join(pdf["docs_enc"].tolist()))
-            cum = np.cumsum(deltas.astype(np.int64))
-            starts = np.concatenate(([0], np.cumsum(n_docs)[:-1]))
-            rebase = np.repeat(cum[starts] - deltas[starts].astype(np.int64), n_docs)
-            rel = (cum - rebase) - base
-            tfs = _varint_decode(b"".join(pdf["tfs_enc"].tolist())).astype(np.float64)
-            dls = _varint_decode(b"".join(pdf["dls_enc"].tolist())).astype(np.float64)
+            ids, tfs, dls = decode_block_batch(
+                n_docs, pdf["docs_enc"], pdf["tfs_enc"], pdf["dls_enc"]
+            )
+            rel = ids - base
+            tfs = tfs.astype(np.float64)
+            dls = dls.astype(np.float64)
             tf_norm = (tfs * (K1 + 1.0)) / (tfs + K1 * (1.0 - B + B * dls / avgdl))
             # contiguous posting slice per term (rows are term-sorted)
             terms_arr = pdf["term"].to_numpy()

@@ -194,22 +194,22 @@ def compact_deltas(spark: SparkSession, index_dir: str, span: int | None = None)
 
 
 def _compact_deltas_locked(spark: SparkSession, index_dir: str, span: int | None) -> int:
-    import json
     import shutil
 
     from .build import doc_part_span
     from .maintenance import (
-        _explode_blocks_stream,
+        _cleanup_tmp_roots,
+        _load_manifest,
         partition_swap_pairs,
-        read_blocks,
         read_extra,
         rebuild_touched_buckets,
+        stage_stats,
         swap_tables,
+        touched_blocks,
     )
+    from .query import decode_blocks
 
-    with open(os.path.join(index_dir, "manifest.json")) as f:
-        manifest = json.load(f)
-    p = manifest["params"]
+    p = _load_manifest(index_dir)["params"]
     if span is not None and int(span) != int(p["span"]):
         raise ValueError(
             f"span override {span} != index build span {p['span']}: "
@@ -296,21 +296,14 @@ def _compact_deltas_locked(spark: SparkSession, index_dir: str, span: int | None
 
     # --- incremental stats: old totals + the delta's count/sum —
     # append-only ingest (delta doc ids are new), no corpus scan
-    old = spark.read.parquet(os.path.join(index_dir, "stats")).collect()[0]
     d = dl_delta.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("dl").alias("t"),
         F.max("dl").alias("m"),
     ).collect()[0]
-    n_new = int(old["n_docs"]) + int(d["n"])
-    t_new = int(old["total_tokens"]) + int(d["t"] or 0)
-    max_dl = max(int(old["max_dl"]), int(d["m"] or 0))
-    avgdl = (t_new / n_new) if n_new else 0.0
-    stats_tmp = os.path.join(index_dir, "stats") + "_tmp"
-    spark.createDataFrame(
-        spark.sparkContext.parallelize([(n_new, avgdl, t_new, max_dl)], 1),
-        "n_docs long, avgdl double, total_tokens long, max_dl long",
-    ).write.mode("overwrite").parquet(stats_tmp)
+    n_new, avgdl = stage_stats(
+        spark, index_dir, int(d["n"]), int(d["t"] or 0), int(d["m"] or 0)
+    )
 
     # --- doc_len_extra: only the doc_part dirs the delta lands in
     docs_span = int(p.get("docs_span") or doc_part_span(n_new, span))
@@ -345,28 +338,17 @@ def _compact_deltas_locked(spark: SparkSession, index_dir: str, span: int | None
         .persist()
     )
     n_touched = affected.count()
-    bucket_list = sorted(
-        r["bucket"] for r in affected.select("bucket").distinct().collect()
-    )
-    base = read_blocks(spark, index_dir)
-    base_scan = (
-        base.where(F.col("bucket").isin(bucket_list))
-        if bucket_list
-        else base.where(F.lit(False))
-    )
-    touched_base = base_scan.join(
-        affected.select("field", "term", "span_id"), ["field", "term", "span_id"]
-    )
-    base_tf = _explode_blocks_stream(touched_base)
+    touched_buckets, base = touched_blocks(spark, index_dir, affected)
     merged_tf = (
-        base_tf.unionByName(delta_k.select("field", "term", "doc_id", "tf", "dl"))
+        decode_blocks(base, with_payload=True)
+        .unionByName(delta_k.select("field", "term", "doc_id", "tf", "dl"))
         .groupBy("field", "term", "doc_id", "dl")
         .agg(F.sum("tf").alias("tf"))
         .withColumn("span_id", F.expr(f"doc_id div {span}"))
     )
-    pairs, _ = rebuild_touched_buckets(
+    pairs = rebuild_touched_buckets(
         spark, index_dir, affected, merged_tf, avgdl, span, boundaries,
-        bucket_list=bucket_list,
+        touched_buckets,
     )
     affected.unpersist()
     dl_delta.unpersist()
@@ -374,7 +356,7 @@ def _compact_deltas_locked(spark: SparkSession, index_dir: str, span: int | None
     pairs += partition_swap_pairs(
         index_dir, "doc_len_extra", extra_tmp, "doc_part", touched_parts
     )
-    pairs.append(("stats", stats_tmp))
+    pairs.append(("stats", os.path.join(index_dir, "stats_tmp")))
     # delta removal rides INSIDE the tombstoned swap (a missing tmp
     # means "remove the final dir"): a crash after folding but before
     # removal would otherwise leave a clean-looking index whose next
@@ -398,8 +380,7 @@ def _compact_deltas_locked(spark: SparkSession, index_dir: str, span: int | None
         op="compact_deltas",
         compact_deltas={"touched_groups": int(n_touched)},
     )
-    for t in ("blocks_tmp", "terms_tmp", "doc_len_extra_tmp"):
-        shutil.rmtree(os.path.join(index_dir, t), ignore_errors=True)
+    _cleanup_tmp_roots(index_dir)
     # a pair completed since the fold snapshot survives the janitor
     # for the next compaction; everything else uncommitted is cleared
     _janitor()

@@ -11,7 +11,7 @@ from neosearch_spark.build import IndexBuilder
 from neosearch_spark.docids import assign_doc_ids
 from neosearch_spark.maintenance import delete_docs
 from neosearch_spark.oracle import OracleIndex
-from neosearch_spark.query import SparkIndex
+from neosearch_spark.query import SparkIndex, decode_blocks
 from neosearch_spark.synth import synth_transcripts
 
 from test_index_golden import assert_block_invariants
@@ -215,8 +215,6 @@ def test_delete_equals_fresh_rebuild_logically(spark, tmp_path):
     (Physical block shapes may differ — the delete path merges former
     singleton whole-string blocks — but every reader is additive over
     blocks, so logical equality is the invariant that matters.)"""
-    from neosearch_spark.maintenance import _explode_blocks_stream
-
     docs = assign_doc_ids(synth_transcripts(spark, 300, seed=77)).cache()
     deleted = {2, 9, 57, 130, 131, 250}
 
@@ -233,8 +231,8 @@ def test_delete_equals_fresh_rebuild_logically(spark, tmp_path):
     )
 
     def logical(d):
-        rows = _explode_blocks_stream(
-            spark.read.parquet(d + "/blocks")
+        rows = decode_blocks(
+            spark.read.parquet(d + "/blocks"), with_payload=True
         ).collect()
         return sorted(
             (r["field"], r["term"], r["doc_id"], r["tf"], r["dl"]) for r in rows

@@ -18,18 +18,16 @@ from pyspark.sql import functions as F
 
 from neosearch_spark.analyzer import doc_len_col
 from neosearch_spark.build import IndexBuilder, _tf_stream
-from neosearch_spark.maintenance import (
-    _explode_blocks_stream,
-    delete_docs,
-    upsert_docs,
-)
+from neosearch_spark.maintenance import delete_docs, upsert_docs
 from neosearch_spark.oracle import OracleIndex
-from neosearch_spark.query import SparkIndex
+from neosearch_spark.query import SparkIndex, decode_blocks
 from neosearch_spark.streaming import compact_deltas
 
 
 def _logical(spark, d):
-    rows = _explode_blocks_stream(spark.read.parquet(d + "/blocks")).collect()
+    rows = decode_blocks(
+        spark.read.parquet(d + "/blocks"), with_payload=True
+    ).collect()
     return sorted(
         (r["field"], r["term"], r["doc_id"], r["tf"], r["dl"]) for r in rows
     )

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from neosearch_spark.build import IndexBuilder
 from neosearch_spark.codec import decode_postings, decode_tfs
-from neosearch_spark.query import SparkIndex
+from neosearch_spark.query import SparkIndex, decode_blocks
 
 
 @pytest.fixture(scope="module")
@@ -80,7 +80,7 @@ def test_empty_array_no_rows(nested_idx):
     # doc 4's empty tags array contributes nothing
     all_tag_docs = {
         r["doc_id"]
-        for r in nested_idx._decode(
+        for r in decode_blocks(
             nested_idx.blocks.where(F.col("field") == "tags")
         ).collect()
     }

@@ -4,6 +4,8 @@ losslessness and the per-turn text-equality invariant."""
 
 from __future__ import annotations
 
+import warnings
+
 import pytest
 
 from neosearch_spark import fts
@@ -519,7 +521,14 @@ def test_batch_distributed_identical_and_bounded_jobs(corpus, monkeypatch):
         sc.setJobGroup(f"after_{group}", "")
         return rows, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    got, jobs4 = count_jobs("hot_batch_4", queries)
+    # the hot path's applyInPandas must pick the grouped-map eval type
+    # without warning that it cannot infer it from type hints
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        got, jobs4 = count_jobs("hot_batch_4", queries)
+    assert not [
+        w for w in caught if "Cannot infer the eval type" in str(w.message)
+    ]
     assert got == baseline
     # the fixed ladder (meta collect + boot + survivors + result) is
     # independent of the number of hot queries: 2-query and 4-query

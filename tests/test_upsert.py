@@ -15,9 +15,9 @@ from pyspark.sql import functions as F
 
 from neosearch_spark.build import IndexBuilder
 from neosearch_spark.docids import assign_doc_ids
-from neosearch_spark.maintenance import _explode_blocks_stream, upsert_docs
+from neosearch_spark.maintenance import upsert_docs
 from neosearch_spark.oracle import OracleIndex
-from neosearch_spark.query import SparkIndex
+from neosearch_spark.query import SparkIndex, decode_blocks
 from neosearch_spark.synth import synth_transcripts
 
 from test_delete import _dir_file_hashes
@@ -25,8 +25,8 @@ from test_index_golden import assert_block_invariants
 
 
 def _logical(spark, d):
-    rows = _explode_blocks_stream(
-        spark.read.parquet(d + "/blocks")
+    rows = decode_blocks(
+        spark.read.parquet(d + "/blocks"), with_payload=True
     ).collect()
     return sorted(
         (r["field"], r["term"], r["doc_id"], r["tf"], r["dl"]) for r in rows
@@ -181,17 +181,19 @@ def test_upsert_crash_mid_swap_refuses_to_open(spark, tmp_path):
         SparkIndex(spark, d)
 
 
-def test_upsert_folds_pending_deltas_first(spark, tmp_path):
-    """A replaced id hiding in an uncompacted streaming delta must
-    not resurrect at the next compaction: upsert compacts pending
-    deltas before replacing."""
+@pytest.mark.parametrize("write", ["upsert", "delete"])
+def test_upsert_folds_pending_deltas_first(spark, tmp_path, write):
+    """A written id hiding in an uncompacted streaming delta must not
+    resurrect at the next compaction: both writes (delete is an
+    upsert with an empty batch) compact pending deltas first."""
     import os
 
-    from neosearch_spark.streaming import delta_sink
+    from neosearch_spark.maintenance import delete_docs
+    from neosearch_spark.streaming import compact_deltas, delta_sink
 
     docs = assign_doc_ids(synth_transcripts(spark, 200, seed=8)).cache()
     n = docs.count()
-    d = str(tmp_path / "up_delta")
+    d = str(tmp_path / f"{write}_delta")
     IndexBuilder(d, span=64).build(docs)
 
     # a delta batch for two new streamed docs through the REAL sink
@@ -202,22 +204,39 @@ def test_upsert_folds_pending_deltas_first(spark, tmp_path):
     )
     delta_sink(delta, 0, d, ["text"])
 
-    # replace the first streamed doc before any explicit compaction
-    batch = (
-        docs.where(F.col("doc_id") == 0)
-        .withColumn("doc_id", F.lit(n).cast("long"))
-        .withColumn("text", F.lit("overwritten tok3"))
-    )
-    counters = upsert_docs(spark, d, batch)
-    assert counters["n_replaced"] == 1
+    # write the first streamed doc before any explicit compaction
+    if write == "upsert":
+        batch = (
+            docs.where(F.col("doc_id") == 0)
+            .withColumn("doc_id", F.lit(n).cast("long"))
+            .withColumn("text", F.lit("overwritten tok3"))
+        )
+        counters = upsert_docs(spark, d, batch)
+        assert counters["n_replaced"] == 1
+        want_docs = n + 2
+    else:
+        counters = delete_docs(
+            spark, d, spark.createDataFrame([(n,)], "doc_id long")
+        )
+        assert counters["n_deleted"] == 1
+        want_docs = n + 1
 
     si = SparkIndex(spark, d)
     assert not os.path.exists(os.path.join(d, "tf_delta"))
     # old streamed content gone, replacement + surviving delta present
     assert {r["doc_id"] for r in si.term_docs("stale").collect()} == set()
-    assert {r["doc_id"] for r in si.term_docs("overwritten").collect()} == {n}
+    want_overwritten = {n} if write == "upsert" else set()
+    assert {
+        r["doc_id"] for r in si.term_docs("overwritten").collect()
+    } == want_overwritten
     assert {r["doc_id"] for r in si.term_docs("keepme").collect()} == {n + 1}
-    assert si.n_docs == n + 2
+    assert si.n_docs == want_docs
+
+    # nothing is left for a later compaction to resurrect
+    compact_deltas(spark, d)
+    si = SparkIndex(spark, d)
+    assert {r["doc_id"] for r in si.term_docs("stale").collect()} == set()
+    assert si.n_docs == want_docs
 
 
 def test_merge_indexes_equals_union_rebuild(spark, tmp_path):
@@ -343,6 +362,7 @@ def test_maintenance_edge_cases(spark, tmp_path):
         spark, d, spark.createDataFrame([(5555,)], "doc_id long")
     )
     assert c["n_deleted"] == 0 and c["n_blocks_touched"] == 0
+    assert c["touched_spans"] == 0
 
     # delete EVERYTHING → empty but openable index; queries return 0
     all_ids = docs.select("doc_id").unionByName(ins.select("doc_id"))
@@ -390,8 +410,8 @@ def test_upsert_array_whole_string_dedupe(spark, tmp_path):
     si = SparkIndex(spark, d_up)
     got = [
         (r["field"], r["term"], r["doc_id"], r["tf"])
-        for r in _explode_blocks_stream(
-            si.blocks.where(F.col("term") == "new york")
+        for r in decode_blocks(
+            si.blocks.where(F.col("term") == "new york"), with_payload=True
         ).collect()
     ]
     assert sorted(got) == [
