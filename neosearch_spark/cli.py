@@ -272,32 +272,12 @@ def cmd_search(args) -> int:
         print(json.dumps({"dry_run": True, **idx.explain_query(
             args.query[0], field=args.field, k=args.k)}))
         return 0
+    results = bm25_results(idx, args.query, args.k, args.field)
     if len(args.query) > 1:
-        # query stream → ONE Spark job (the reference's REST search
-        # serves a request stream; bm25_topk_batch is its scale path)
-        rows = idx.bm25_topk_batch(args.query, k=args.k, field=args.field).collect()
-        out = [
-            {
-                "query": args.query[qi],
-                "results": [
-                    {"doc_id": r["doc_id"], "score": r["score"]}
-                    for r in rows
-                    if r["query_id"] == qi
-                ],
-            }
-            for qi in range(len(args.query))
-        ]
+        out = [{"query": q, "results": r} for q, r in zip(args.query, results)]
         print(json.dumps({"batch": out}))
         return 0
-    top = idx.bm25_topk(args.query[0], k=args.k, field=args.field).collect()
-    print(
-        json.dumps(
-            {
-                "total": len(top),
-                "results": [{"doc_id": r["doc_id"], "score": r["score"]} for r in top],
-            }
-        )
-    )
+    print(json.dumps({"total": len(results[0]), "results": results[0]}))
     return 0
 
 
@@ -385,6 +365,23 @@ def validate_search_request(
     return queries, int(req.get("k", default_k)), field
 
 
+def bm25_results(idx, queries: list[str], k: int, field: str) -> list[list[dict]]:
+    """Per query, its BM25 top-k as ``{"doc_id", "score"}`` dicts —
+    the scorer's driver rows, never a DataFrame to collect again.  A
+    single query goes through the handle's result memo; a stream is
+    scored as one batch (``SparkIndex._topk_rows``)."""
+    from .analyzer import analyze_query
+
+    if len(queries) == 1:
+        rows = [(0, d, s) for d, s in idx._cached_topk(queries[0], k, field)]
+    else:
+        rows = idx._topk_rows([analyze_query(q) for q in queries], k, field)
+    results: list[list[dict]] = [[] for _ in queries]
+    for qi, d, s in rows:
+        results[qi].append({"doc_id": d, "score": s})
+    return results
+
+
 def handle_search_request(idx, req: dict, default_k: int = 10) -> dict:
     """One serving request against a warm ``SparkIndex`` → response
     dict — the transport-independent core shared by the stdin loop
@@ -399,25 +396,10 @@ def handle_search_request(idx, req: dict, default_k: int = 10) -> dict:
     want_snippets = req.get("snippets", False)
     if field is None:
         field = getattr(idx, "primary_field", "text")
-    if len(queries) == 1:
-        rows = [
-            {"doc_id": r["doc_id"], "score": r["score"]}
-            for r in idx.bm25_topk(queries[0], k=k, field=field).collect()
-        ]
-        batch = [{"query": queries[0], "results": rows}]
-    else:
-        rows = idx.bm25_topk_batch(queries, k=k, field=field).collect()
-        batch = [
-            {
-                "query": queries[qi],
-                "results": [
-                    {"doc_id": r["doc_id"], "score": r["score"]}
-                    for r in rows
-                    if r["query_id"] == qi
-                ],
-            }
-            for qi in range(len(queries))
-        ]
+    batch = [
+        {"query": q, "results": r}
+        for q, r in zip(queries, bm25_results(idx, queries, k, field))
+    ]
     if want_snippets:
         _attach_snippets(idx, batch, field)
     return {"batch": batch}
@@ -469,9 +451,9 @@ def serve_loop(idx, lines, out, default_k: int = 10) -> int:
 
     Warm-process economics: the index handle's per-term metadata memo
     (``SparkIndex._term_meta``) means repeat terms skip the
-    terms-table probe, and multi-query requests batch through
-    ``bm25_topk_batch`` (ONE Spark job per request).  Returns the
-    number of requests served."""
+    terms-table probe, and multi-query requests batch through one
+    scorer call (``bm25_results``); a request under the local posting
+    cap runs no Spark job.  Returns the number of requests served."""
     served = 0
     for line in lines:
         line = line.strip()
@@ -492,9 +474,7 @@ def cmd_serve(args) -> int:
     from .query import SparkIndex
 
     spark = _spark(args)
-    idx = SparkIndex(
-        spark, args.index, cache=args.cache, result_cache=args.result_cache
-    )
+    idx = SparkIndex(spark, args.index, result_cache=args.result_cache)
     served = serve_loop(idx, sys.stdin, sys.stdout, default_k=args.k)
     print(json.dumps({"status": "served", "requests": served}), file=sys.stderr)
     return 0
@@ -752,10 +732,10 @@ def main(argv: list[str] | None = None) -> int:
                    help="print the physical plan (pushed filters) without executing")
     q.set_defaults(fn=cmd_query)
 
-    s = sub.add_parser("search", help="BM25 top-k (repeat --query for a one-job batch)")
+    s = sub.add_parser("search", help="BM25 top-k (repeat --query for a batch)")
     s.add_argument("--index", required=True)
     s.add_argument("--query", required=True, action="append",
-                   help="query text; pass multiple times to serve the batch in ONE Spark job")
+                   help="query text; pass multiple times to score the stream as one batch")
     s.add_argument("-k", type=int, default=10)
     s.add_argument("--field", default=None,
                    help="analyzed field to score; defaults to the "
@@ -793,8 +773,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     sv.add_argument("--index", required=True)
     sv.add_argument("-k", type=int, default=10)
-    sv.add_argument("--cache", action="store_true",
-                    help="pin blocks/terms in executor memory")
     sv.add_argument("--result-cache", type=int, default=4096,
                     help="memoize up to N BM25 results (LRU): exact "
                          "repeats cost zero Spark jobs; 0 disables")

@@ -102,9 +102,7 @@ class NeoSearchHTTPServer(ThreadingHTTPServer):
         # thread (get/insert/move_to_end/evict) — its own lock keeps
         # a move_to_end from racing a concurrent invalidate/evict pop
         # (KeyError on a valid request otherwise).  SparkIndex opens
-        # serialize behind it too: an open is one small job, and two
-        # threads opening the same index concurrently would just do
-        # the work twice.
+        # run outside it (see open()).
         self.handles_lock = threading.Lock()
         # per-name invalidation generation (guarded by handles_lock):
         # open() constructs outside the lock, so it must detect an
@@ -148,12 +146,13 @@ class NeoSearchHTTPServer(ThreadingHTTPServer):
         invalidate the whole handle, memos included."""
         from .query import SparkIndex
 
-        # construction happens OUTSIDE the lock: a cold open runs a
-        # manifest read + a small Spark job, and holding the global
-        # lock across it would stall cache hits for every OTHER index
-        # behind one slow open.  Two threads cold-opening the SAME
-        # index may construct twice; the second insert defers to the
-        # first (duplicate work, never duplicate cached handles).
+        # construction happens OUTSIDE the lock: a cold open reads the
+        # manifest and the stats row and lists the blocks and terms
+        # files (no Spark job), and holding the global lock across it
+        # would stall cache hits for every OTHER index behind one slow
+        # open.  Two threads cold-opening the SAME index may construct
+        # twice; the second insert defers to the first (duplicate
+        # work, never duplicate cached handles).
         with self.handles_lock:
             h = self.handles.get(name)
             if h is not None:
@@ -329,18 +328,13 @@ class _Handler(BaseHTTPRequestHandler):
                     return
                 idx = srv.open(name)
                 try:
-                    rows = idx.more_like_this(
-                        int_id, k=k, n_terms=n_terms
-                    ).collect()
+                    rows = idx._mlt_rows(int_id, k=k, n_terms=n_terms)
                 except KeyError:
                     self._send({"error": f"document {int_id} not found"}, 400)
                     return
                 self._send({
                     "doc_id": int_id,
-                    "results": [
-                        {"doc_id": r["doc_id"], "score": r["score"]}
-                        for r in rows
-                    ],
+                    "results": [{"doc_id": d, "score": s} for d, s in rows],
                 })
                 return
             if doc_id is None:

@@ -453,11 +453,10 @@ def delete_docs(
     (a streamed, not yet compacted doc is deleted, not resurrected by
     the next compaction) and is O(touched) end to end (see module
     docstring).  ``n_deleted`` counts rows actually removed (absent
-    ids don't count).  Idempotent: re-deleting absent ids touches no
-    blocks and rewrites the ids' doc_part directories to identical
-    content.  Single-writer: concurrent maintenance on one index is
-    excluded by ``writer_lock`` (reference singleton-writer
-    semantics)."""
+    ids don't count).  Idempotent: a delete of only absent ids
+    returns zero counters before any write.  Single-writer:
+    concurrent maintenance on one index is excluded by
+    ``writer_lock`` (reference singleton-writer semantics)."""
     no_docs = read_docs(spark, index_dir).drop("dl", "doc_part").where(F.lit(False))
     with writer_lock(index_dir):
         return _write_docs_locked(
@@ -711,6 +710,11 @@ def _write_docs_locked(
             read_extra(spark, index_dir).join(ids, "doc_id", "semi").persist()
         )
 
+    def release() -> None:
+        for df in (batch, removed_docs, extra_removed):
+            if df is not None:
+                df.unpersist()
+
     # --- affected groups: OLD content of removed docs ∪ NEW batch
     # content (both through the build's own analyzer, so terms match
     # the persisted postings exactly) — O(touched), no index probe
@@ -766,16 +770,18 @@ def _write_docs_locked(
     ).collect()[0]
     n_batch, t_batch = int(bstat["n"]), int(bstat["t"] or 0)
     if n_batch != int(bstat["nd"]):
-        batch.unpersist()
-        removed_docs.unpersist()
-        if extra_removed is not None:
-            extra_removed.unpersist()
+        release()
         raise ValueError(
             f"upsert batch has duplicate doc_ids ({n_batch} rows, "
             f"{int(bstat['nd'])} distinct) — a distributed batch has no "
             "row order, so last-write-wins is undefined; dedupe the "
             "batch first"
         )
+    if n_batch == 0 and n_rem == 0:
+        # nothing to remove or add (a delete of absent ids): return
+        # before any write — no directory, stats or manifest changes
+        release()
+        return _write_counters(op, 0, 0, 0, 0, 0, 0)
     _, avgdl = stage_stats(
         spark, index_dir, n_batch - n_rem, t_batch - t_rem, int(bstat["m"] or 0)
     )
@@ -841,23 +847,32 @@ def _write_docs_locked(
         )
     pairs.append(("stats", os.path.join(index_dir, "stats_tmp")))
 
+    counters = _write_counters(
+        op, n_batch, n_rem, n_touched_spans, int(n_touched_blocks),
+        len(touched_buckets), len(touched_parts),
+    )
+    release()
+    swap_tables(
+        index_dir, pairs, op=op, crash_after=crash_after, **{op: counters}
+    )
+    _cleanup_tmp_roots(index_dir)
+    return counters
+
+
+def _write_counters(
+    op: str, n_batch: int, n_rem: int, spans: int, blocks: int,
+    buckets: int, parts: int,
+) -> dict:
+    """The document write's counters, keyed for ``op``."""
     counters = (
         {"n_deleted": n_rem}
         if op == "delete_docs"
         else {"n_upserted": n_batch, "n_replaced": n_rem}
     )
     counters.update(
-        touched_spans=n_touched_spans,
-        n_blocks_touched=int(n_touched_blocks),
-        touched_buckets=len(touched_buckets),
-        touched_doc_parts=len(touched_parts),
+        touched_spans=spans,
+        n_blocks_touched=blocks,
+        touched_buckets=buckets,
+        touched_doc_parts=parts,
     )
-    removed_docs.unpersist()
-    batch.unpersist()
-    if extra_removed is not None:
-        extra_removed.unpersist()
-    swap_tables(
-        index_dir, pairs, op=op, crash_after=crash_after, **{op: counters}
-    )
-    _cleanup_tmp_roots(index_dir)
     return counters

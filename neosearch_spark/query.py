@@ -13,7 +13,8 @@ Scale notes:
   time so row-group min/max stats prune most of the scan.
 - BM25 top-k has one scorer for one query or a batch
   (``_topk_rows``): queries with a small posting volume are scored on
-  the driver from one pushed-down payload scan; hot queries group
+  the driver from one Arrow read of their bucket directories (no
+  Spark job); hot queries group
   blocks by doc-span: every span scores independently (one Arrow
   batch each, numpy inside), emits ≤k candidates per query, and only
   those candidate sets (cut to k per query distributed when many
@@ -36,14 +37,49 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .analyzer import analyze_query
+from .build import BLOCK_SCHEMA
 from .codec import decode_block_batch, decode_postings, decode_tfs
 
 K1 = 1.2
 B = 0.75
+
+TERMS_SCHEMA = (
+    "field string, term string, df long, max_tf_norm double, "
+    "n_blocks long, bucket int"
+)
+
+_ARROW_TYPES = {
+    "string": pa.string(),
+    "long": pa.int64(),
+    "int": pa.int32(),
+    "double": pa.float64(),
+    "binary": pa.binary(),
+}
+
+
+def arrow_dataset(path: str, ddl: str) -> pads.Dataset:
+    """A bucket-partitioned index table (blocks/ or terms/) as a
+    driver-side Arrow dataset with the table's Spark schema (``ddl``):
+    the files are listed once, here, and an emptied table still reads
+    as empty (schema inference would fail on it)."""
+    schema = pa.schema(
+        [(n, _ARROW_TYPES[t]) for n, t in (c.split() for c in ddl.split(","))]
+    )
+    return pads.dataset(
+        path,
+        schema=schema,
+        format="parquet",
+        partitioning=pads.partitioning(
+            pa.schema([("bucket", pa.int32())]), flavor="hive"
+        ),
+    )
 
 
 def decode_blocks(blocks: DataFrame, with_payload: bool = False) -> DataFrame:
@@ -86,22 +122,21 @@ def decode_blocks(blocks: DataFrame, with_payload: bool = False) -> DataFrame:
 class SparkIndex:
     """Handle to a persisted index directory (the analog of the
     reference's ``NeoSearch.OpenIndex``, ``neosearch.go:170-206`` —
-    minus the LRU: Spark's block manager owns caching)."""
+    minus the LRU, which the HTTP server keeps over open handles)."""
 
     def __init__(
         self,
         spark: SparkSession,
         index_dir: str,
-        cache: bool = False,
         result_cache: int = 0,
     ):
-        """cache=True pins the blocks/terms DataFrames in executor
-        memory (MEMORY_AND_DISK, LRU-evicted) — the Spark-native form
-        of the reference's open-handle LRU (``neosearch.go:117-123``)
-        and the north star's "broadcast posting blocks": a serving
-        deployment keeps the hot index resident.  At 10^12-turn scale
-        the block manager caches whatever fits and spills the rest —
-        correctness is unaffected.
+        """Opening runs no Spark job: the manifest and the stats row
+        are read on the driver, and the blocks and terms tables are
+        listed once into Arrow datasets that the small-query path
+        (``_arrow_rows``) reads directly.  The Spark DataFrames over
+        the same tables are created on first use.  Both views are the
+        files present at open: maintenance swaps tables, callers
+        reopen.
 
         result_cache=N (>0) additionally memoizes up to N BM25 top-k
         RESULTS (driver-side, ≤k rows each, LRU): an index is
@@ -146,15 +181,20 @@ class SparkIndex:
         # built on ["company_name"] must not silently score the
         # nonexistent "text" field and return empty results)
         self.primary_field: str = (p.get("analyzed_fields") or ["text"])[0]
-        stats = spark.read.parquet(os.path.join(index_dir, "stats")).collect()[0]
+        stats = pq.read_table(os.path.join(index_dir, "stats")).to_pylist()[0]
         self.n_docs = int(stats["n_docs"])
         self.avgdl = float(stats["avgdl"])
-        self._cache = cache
+        self._blocks_ds = arrow_dataset(
+            os.path.join(index_dir, "blocks"), BLOCK_SCHEMA + ", bucket int"
+        )
+        self._terms_ds = arrow_dataset(
+            os.path.join(index_dir, "terms"), TERMS_SCHEMA
+        )
         self._blocks_df: DataFrame | None = None
         self._terms_df: DataFrame | None = None
         # per-term (df, n_blocks) memo fed from the terms table: a
         # serving process pays ONE bucket-pruned probe per new term,
-        # repeat queries run in a single Spark job.  Maintenance ops
+        # repeat queries skip it.  Maintenance ops
         # (delete_docs / compact_deltas) change dfs — reopen the
         # index after them (they swap stats anyway, which is also
         # read once at open).
@@ -178,30 +218,25 @@ class SparkIndex:
 
         self._memo_lock = threading.Lock()
 
+    # two handler threads racing a lazy init below build two equal
+    # plans; either one serves
     @property
     def blocks(self) -> DataFrame:
-        # _memo_lock: two handler threads racing the lazy init would
-        # otherwise .cache() two equal-but-distinct plans (double pin)
-        with self._memo_lock:
-            if self._blocks_df is None:
-                from .maintenance import read_blocks
+        if self._blocks_df is None:
+            from .maintenance import read_blocks
 
-                # explicit schema: valid even when maintenance emptied
-                # every bucket directory (schema inference would fail)
-                df = read_blocks(self.spark, self.index_dir)
-                self._blocks_df = df.cache() if self._cache else df
-            return self._blocks_df
+            # explicit schema: valid even when maintenance emptied
+            # every bucket directory (schema inference would fail)
+            self._blocks_df = read_blocks(self.spark, self.index_dir)
+        return self._blocks_df
 
     @property
     def terms(self) -> DataFrame:
-        with self._memo_lock:
-            if self._terms_df is None:
-                df = self.spark.read.schema(
-                    "field string, term string, df long, max_tf_norm double, "
-                    "n_blocks long, bucket int"
-                ).parquet(os.path.join(self.index_dir, "terms"))
-                self._terms_df = df.cache() if self._cache else df
-            return self._terms_df
+        if self._terms_df is None:
+            self._terms_df = self.spark.read.schema(TERMS_SCHEMA).parquet(
+                os.path.join(self.index_dir, "terms")
+            )
+        return self._terms_df
 
     @property
     def docs(self) -> DataFrame:
@@ -256,6 +291,18 @@ class SparkIndex:
         lo = self._bucket_of(prefix)
         hi = sum(1 for b in self.bucket_boundaries if b[: len(prefix)] <= prefix)
         return df.where(F.col("bucket").between(lo, hi))
+
+    def _arrow_rows(
+        self, dataset: pads.Dataset, columns: list[str], terms: list[str], field: str
+    ) -> list[dict]:
+        """``columns`` of the (field, term ∈ terms) rows of the blocks
+        or terms dataset, read on the driver from the terms' bucket
+        directories only — no Spark job."""
+        cond = (pads.field("field") == field) & pads.field("term").isin(terms)
+        if self.bucket_boundaries:
+            bs = sorted({self._bucket_of(t) for t in terms})
+            cond &= pads.field("bucket").isin(bs)
+        return dataset.to_table(columns=columns, filter=cond).to_pylist()
 
     # ---------------- boolean surface (reference parity) ----------------
 
@@ -568,9 +615,22 @@ class SparkIndex:
 
         Cost: ONE doc-store point lookup (broadcast-joined id) +
         the memoized term-metadata probe for idf + one standard
-        top-k query — the expansion never touches postings, and a
-        warm serving process pays only the final query job.  Like
+        top-k query — the expansion never touches postings.  Like
         ``get_docs``, the source lookup reads the doc store."""
+        return self._topk_df(
+            self._mlt_rows(doc_id, field, n_terms, k, exclude_self, min_df)
+        )
+
+    def _mlt_rows(
+        self,
+        doc_id: int,
+        field: str = "text",
+        n_terms: int = 5,
+        k: int = 10,
+        exclude_self: bool = True,
+        min_df: int = 2,
+    ) -> list[tuple[int, float]]:
+        """``more_like_this``'s (doc_id, score) rows, on the driver."""
         ids = self.spark.createDataFrame([(int(doc_id),)], "doc_id long")
         rows = self.get_docs(ids).select(
             F.col(field).cast("string").alias("t")
@@ -583,13 +643,13 @@ class SparkIndex:
         for t in toks:
             tf[t] = tf.get(t, 0) + 1
         if not tf:
-            return self._topk_df([])
+            return []
         meta = self._term_meta(list(tf), field)
         dfmap = {t: m[0] for t, m in meta.items()}
         idf = self._idf(dfmap, list(tf))
         cand = [t for t in tf if dfmap.get(t, 0) >= min_df]
         if not cand:
-            return self._topk_df([])
+            return []
         ranked = sorted(
             cand, key=lambda t: (-(tf[t] * idf.get(t, 0.0)), t)
         )[: max(1, n_terms)]
@@ -598,7 +658,7 @@ class SparkIndex:
         )
         if exclude_self:
             rows = [r for r in rows if r[0] != int(doc_id)][:k]
-        return self._topk_df(rows)
+        return rows
 
     def top_terms(self, n: int = 20, field: str = "text") -> DataFrame:
         """Vocabulary introspection: the ``n`` highest-df terms of a
@@ -673,11 +733,10 @@ class SparkIndex:
         self, qterms: list[str], field: str = "text"
     ) -> dict[str, tuple[int, int]]:
         """(df, n_blocks) per query term, memoized.  Unseen terms
-        cost one bucket-pruned probe of the terms table (1 MB row
-        groups sorted by term → ~one row group per file); seen terms
-        are free, so a warm serving process answers a query in a
-        single Spark job.  Terms absent from the index memoize as
-        (0, 0)."""
+        cost one bucket-pruned Arrow read of the terms table (1 MB
+        row groups sorted by term → ~one row group per file), no
+        Spark job; seen terms are free.  Terms absent from the index
+        memoize as (0, 0)."""
         with self._memo_lock:
             if len(self._meta_cache) > 4_000_000:  # soft cap: ~200 MB
                 self._meta_cache.clear()  # of memo in a long-lived server
@@ -688,11 +747,8 @@ class SparkIndex:
             }
         missing = [t for t in qterms if t not in have]
         if missing:
-            rows = (
-                self._bucket_terms(self.terms, missing)
-                .where((F.col("field") == field) & F.col("term").isin(missing))
-                .select("term", "df", "n_blocks")
-                .collect()
+            rows = self._arrow_rows(
+                self._terms_ds, ["term", "df", "n_blocks"], missing, field
             )
             got = {r["term"]: (int(r["df"]), int(r["n_blocks"])) for r in rows}
             fetched = {t: got.get(t, (0, 0)) for t in missing}
@@ -761,11 +817,11 @@ class SparkIndex:
         return {t: have[t] for t in uniq}
 
     # below this many total postings across the query's terms, the
-    # compressed blocks are ≤ ~10 MB — fetch them with one pushed-down
-    # scan (term-range file layout prunes to a few files) and score
-    # locally: the "broadcast posting blocks" fast path.  Above it,
-    # the distributed per-span path takes over (a hot term at 10^12
-    # turns can never be collected).  Measured on a 3M-turn corpus:
+    # compressed blocks are ≤ ~10 MB — read them on the driver with one
+    # Arrow scan of their bucket directories (the (field, term, span)
+    # file order prunes row groups) and score locally, no Spark job.
+    # Above it, the distributed per-span path takes over (a hot term at
+    # 10^12 turns can never be collected).  Measured on a 3M-turn corpus:
     # local beats the distributed path up to at least ~3M
     # postings/query.
     LOCAL_SCORE_MAX_POSTINGS = 4_000_000
@@ -875,8 +931,9 @@ class SparkIndex:
         """Dry-run planning surface (the ``_analyze`` analog,
         reference ``service/neosearch/index/get_analyze.go:27-76``):
         what WOULD run, without executing any job.  Returns the
-        analyzed terms, the block-scan physical plan (showing the
-        pushed-down term predicate), and the path-selection knobs."""
+        analyzed terms, the distributed path's block-scan physical
+        plan (showing the pushed-down term predicate), and the
+        path-selection knobs."""
         qterms = analyze_query(query)
         uniq = list(dict.fromkeys(qterms))
         blocks_q = self._bucket_terms(self.blocks, uniq).where(
@@ -895,8 +952,9 @@ class SparkIndex:
             "stages": [
                 "1. per-term (df, n_blocks) from the memoized terms-table "
                 "metadata (no job when the terms were seen before)",
-                f"2. ≤{self.LOCAL_SCORE_MAX_POSTINGS} postings → ONE "
-                "pushed-down payload scan + driver-local scoring",
+                f"2. ≤{self.LOCAL_SCORE_MAX_POSTINGS} postings → Arrow read "
+                "of the query's bucket directories + driver scoring, no "
+                "Spark job",
                 "3. else distributed per-span scoring with block-max WAND "
                 f"pruning (span-bound metadata capped at {self.META_COLLECT_CAP} "
                 "blocks, else every span scored); candidates merged "
@@ -910,9 +968,10 @@ class SparkIndex:
         """BM25 top-k, ordered (score desc, doc_id asc).
 
         The query's posting volume picks the path (``_topk_rows``):
-        driver-local scoring of one pushed-down payload scan when it is
-        small, else distributed per-span scoring with block-max WAND
-        pruning — both bit-identical to ``OracleIndex`` (tested).
+        driver-local scoring of one Arrow read of the query's bucket
+        directories when it is small, else distributed per-span
+        scoring with block-max WAND pruning — both bit-identical to
+        ``OracleIndex`` (tested).
 
         With ``result_cache`` enabled (serving processes), an exact
         repeat returns the memoized ≤k rows with ZERO scoring jobs;
@@ -1216,9 +1275,9 @@ class SparkIndex:
 
         - COLD queries (posting volume ≤ LOCAL_SCORE_MAX_POSTINGS,
           from the memoized terms-table metadata) are greedily packed
-          into shared pushed-down scans: ONE payload collect + decode
-          serves a whole chunk, scored per query on the driver
-          (``_score_decoded``).
+          into shared reads: ONE Arrow read of the chunk's bucket
+          directories + decode serves a whole chunk, scored per query
+          on the driver (``_score_decoded``) — no Spark job.
         - HOT queries (over the cap — their blocks can never be
           collected) all go through ONE batched distributed WAND:
           ≤2 span-scoring jobs for the entire hot set
@@ -1258,10 +1317,9 @@ class SparkIndex:
             chunk_terms = list(
                 dict.fromkeys(t for qi in chunk for t in qterms_list[qi])
             )
-            blocks_q = self._bucket_terms(self.blocks, chunk_terms).where(
-                (F.col("field") == field) & F.col("term").isin(chunk_terms)
+            rows = self._arrow_rows(
+                self._blocks_ds, self._PAYLOAD_COLS, chunk_terms, field
             )
-            rows = blocks_q.select(*self._PAYLOAD_COLS).collect()
             decoded = self._decode_rows(rows)
             for qi in chunk:
                 qterms = qterms_list[qi]

@@ -482,19 +482,52 @@ def test_batch_fallback_identical(corpus, monkeypatch):
     assert fallback == baseline
 
 
-def test_batch_is_one_spark_job(corpus):
-    """The serving-path amortization claim: with warmed term
-    metadata, scoring an N-query batch runs exactly ONE Spark job
-    (the union-of-terms payload scan)."""
+def _jobs_in_group(sc, group, fn):
+    """(fn(), number of Spark jobs fn ran), counted by job group."""
+    sc.setJobGroup(group, f"{group} job count")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(f"after_{group}", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_cold_batch_runs_no_spark_job(corpus):
+    """With warmed term metadata, scoring a batch of cold queries
+    (posting volume under the local cap) runs NO Spark job: the
+    union-of-terms payload is one Arrow read on the driver."""
     si, _, _ = corpus
     queries = ["tok1 tok3", "tok17 tok2", "tok5 tok9"]
     si.bm25_topk_batch(queries, 10)  # warm: memoizes term metadata
+    _, jobs = _jobs_in_group(
+        si.spark.sparkContext, "batch_probe",
+        lambda: si.bm25_topk_batch(queries, 10),
+    )
+    assert jobs == 0, f"expected no Spark job for the cold batch, got {jobs}"
+
+
+def test_cold_single_request_runs_no_spark_job(corpus, monkeypatch):
+    """A cold single BM25 request on a freshly opened handle — open,
+    terms probe, payload read and scoring — runs NO Spark job through
+    the serving core.  Forced onto the distributed path, the same
+    request runs Spark jobs and answers identical rows."""
+    from neosearch_spark.cli import handle_search_request
+
+    si, _, _ = corpus
     sc = si.spark.sparkContext
-    sc.setJobGroup("batch_probe", "batch job count")
-    si.bm25_topk_batch(queries, 10)
-    sc.setJobGroup("after_probe", "")
-    ids = sc.statusTracker().getJobIdsForGroup("batch_probe")
-    assert len(ids) == 1, f"expected 1 scan job for the batch, got {len(ids)}"
+    req = {"queries": ["tok1 tok3 tok17"], "k": 10}
+
+    def fresh_request():
+        idx = SparkIndex(si.spark, si.index_dir, result_cache=16)
+        return handle_search_request(idx, req)
+
+    local, jobs = _jobs_in_group(sc, "cold_single", fresh_request)
+    assert jobs == 0, f"expected no Spark job for a cold request, got {jobs}"
+    assert local["batch"][0]["results"]
+    monkeypatch.setattr(SparkIndex, "LOCAL_SCORE_MAX_POSTINGS", 0)
+    hot, hot_jobs = _jobs_in_group(sc, "cold_single_hot", fresh_request)
+    assert hot_jobs > 0
+    assert hot == local
 
 
 def test_batch_distributed_identical_and_bounded_jobs(corpus, monkeypatch):

@@ -10,6 +10,8 @@ exactly, new content is indexed, and only touched ``bucket=`` /
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -357,12 +359,29 @@ def test_maintenance_edge_cases(spark, tmp_path):
     assert c["n_upserted"] == 2 and c["n_replaced"] == 0
     assert SparkIndex(spark, d).n_docs == 82
 
-    # delete of absent ids touches nothing
+    # delete of absent ids touches nothing: no file is rewritten and
+    # the manifest records no write
+    def inodes():
+        return {
+            os.path.relpath(os.path.join(base, f), d): os.stat(
+                os.path.join(base, f)
+            ).st_ino
+            for base, _, files in os.walk(d)
+            for f in files
+        }
+
+    def manifest():
+        with open(os.path.join(d, "manifest.json")) as f:
+            return f.read()
+
+    files_before, manifest_before = inodes(), manifest()
     c = delete_docs(
         spark, d, spark.createDataFrame([(5555,)], "doc_id long")
     )
     assert c["n_deleted"] == 0 and c["n_blocks_touched"] == 0
     assert c["touched_spans"] == 0
+    assert inodes() == files_before
+    assert manifest() == manifest_before
 
     # delete EVERYTHING → empty but openable index; queries return 0
     all_ids = docs.select("doc_id").unionByName(ins.select("doc_id"))
