@@ -32,7 +32,9 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from functools import reduce
 
+import numpy as np
 from pyspark.sql import functions as F
 
 
@@ -63,55 +65,47 @@ def cmd_build(args) -> int:
     return 0
 
 
-def _eval_dsl(idx, dsl: dict):
-    """Evaluate a reference-DSL query dict → doc_id DataFrame."""
+def validate_dsl(dsl: dict) -> tuple:
+    """Shape-check a boolean-DSL dict WITHOUT an index → its parsed
+    tree.  The one DSL parser: both evaluators (``_eval_dsl``'s
+    DataFrames, ``run_dsl_query``'s arrays) walk this tree, so every
+    malformed-shape error fires identically for an index in ANY state
+    (the HTTP pending-index path — a request must validate the same
+    way whether or not the first document has arrived).
+
+    Nodes are ``(op, [children])`` for ``$and``/``$or``/``$not``
+    ([include, exclude]) and ``$xor`` ([a, b]); leaves are ``(method,
+    field, kwargs)``, naming the ``SparkIndex`` method that evaluates
+    them (``term_docs`` for a plain term)."""
     if "$and" in dsl:
-        clauses = dsl["$and"]
-        if not clauses:
+        if not dsl["$and"]:
             raise ValueError("empty $and clause list")
-        res = None
-        for c in clauses:
-            d = _eval_dsl(idx, c)
-            res = d if res is None else res.join(d, "doc_id", "inner")
-        return res.orderBy("doc_id")
+        return ("$and", [validate_dsl(c) for c in dsl["$and"]])
     if "$or" in dsl:
         if not dsl["$or"]:
             raise ValueError("empty $or clause list")
-        res = None
-        for c in dsl["$or"]:
-            d = _eval_dsl(idx, c)
-            res = d if res is None else res.unionByName(d)
-        return res.distinct().orderBy("doc_id")
+        return ("$or", [validate_dsl(c) for c in dsl["$or"]])
     if "$not" in dsl:
         # planned-but-unshipped reference operator (PROPOSAL.md:
         # 223-224): [include, exclude] → include minus exclude;
         # clauses compose recursively ($and/$or/$prefix inside)
         inc, exc = dsl["$not"]
-        return (
-            _eval_dsl(idx, inc)
-            .join(_eval_dsl(idx, exc), "doc_id", "left_anti")
-            .orderBy("doc_id")
-        )
+        return ("$not", [validate_dsl(inc), validate_dsl(exc)])
     if "$xor" in dsl:
-        # symmetric difference of two recursively-evaluated clauses
-        a, b = (_eval_dsl(idx, c) for c in dsl["$xor"])
-        return (
-            a.join(b, "doc_id", "left_anti")
-            .unionByName(b.join(a, "doc_id", "left_anti"))
-            .orderBy("doc_id")
-        )
+        # symmetric difference of two recursively-parsed clauses
+        a, b = (validate_dsl(c) for c in dsl["$xor"])
+        return ("$xor", [a, b])
     (field, term), = dsl.items()
     if isinstance(term, dict) and "$prefix" in term:
         prefix = term["$prefix"]
         if not isinstance(prefix, str):
-            # checked HERE, not downstream in prefix_docs, so the
-            # stub-backed validate_dsl path raises the identical
-            # error — a pending index must 400 the same way a live
-            # one does (live would TypeError inside _bucket_prefix)
+            # checked HERE, not downstream in prefix_docs, so a
+            # pending index 400s the same way a live one does (live
+            # would TypeError inside _bucket_prefix)
             raise ValueError(
                 f"$prefix value must be a string, got {type(prefix).__name__}"
             )
-        return idx.prefix_docs(prefix, field=field)
+        return ("prefix_docs", field, {"prefix": prefix})
     if isinstance(term, dict) and "$fuzzy" in term:
         # engine extension (no reference analog): Lucene-FuzzyQuery-
         # style match — {"field": {"$fuzzy": "term", "max_dist": 1}}
@@ -125,7 +119,7 @@ def _eval_dsl(idx, dsl: dict):
             raise ValueError(
                 f"$fuzzy max_dist must be a non-negative integer, got {md!r}"
             )
-        return idx.fuzzy_docs(fz, field=field, max_dist=md)
+        return ("fuzzy_docs", field, {"term": fz, "max_dist": md})
     if isinstance(term, dict) and "$wildcard" in term:
         # engine extension: Lucene-WildcardQuery-style match —
         # {"field": {"$wildcard": "pat*ern"}} (* = any run, ? = one char)
@@ -134,7 +128,7 @@ def _eval_dsl(idx, dsl: dict):
             raise ValueError(
                 f"$wildcard value must be a string, got {type(wc).__name__}"
             )
-        return idx.wildcard_docs(wc, field=field)
+        return ("wildcard_docs", field, {"pattern": wc})
     if isinstance(term, dict) and "$near" in term:
         # engine extension: Lucene-SpanNearQuery-style proximity —
         # {"field": {"$near": ["a", "b"], "max_dist": 3}}
@@ -153,7 +147,7 @@ def _eval_dsl(idx, dsl: dict):
             raise ValueError(
                 f"$near max_dist must be a positive integer, got {md!r}"
             )
-        return idx.near_docs(pair[0], pair[1], max_dist=md, field=field)
+        return ("near_docs", field, {"term_a": pair[0], "term_b": pair[1], "max_dist": md})
     if isinstance(term, dict) and "$phrase" in term:
         # engine extension: exact-phrase match inside a value —
         # {"field": {"$phrase": "two words"}}; the reference's
@@ -164,7 +158,7 @@ def _eval_dsl(idx, dsl: dict):
                 '$phrase value must be a non-empty string, got '
                 f"{ph if isinstance(ph, str) else type(ph).__name__!r}"
             )
-        return idx.phrase_docs(ph, field=field)
+        return ("phrase_docs", field, {"phrase": ph})
     if isinstance(term, (list, dict)):
         # a typo'd operator ({"and": [...]} for {"$and": [...]})
         # lands here as field="and", term=<list> — stringifying it
@@ -176,65 +170,121 @@ def _eval_dsl(idx, dsl: dict):
             "{'$wildcard': ...}, phrase is {'$phrase': ...}, proximity "
             "is {'$near': [a, b], 'max_dist': N}"
         )
-    return idx.term_docs(str(term), field=field)
+    return ("term_docs", field, {"term": str(term)})
 
 
-def validate_dsl(dsl: dict) -> None:
-    """Shape-check a boolean-DSL dict WITHOUT an index: runs the real
-    evaluator against no-op stubs, so every malformed-shape error
-    ``_eval_dsl`` raises fires identically for an index in ANY state
-    (the HTTP pending-index path — a request must validate the same
-    way whether or not the first document has arrived)."""
+# the array evaluator's operators over sorted unique doc_id arrays
+# (every leaf and every result is one)
+_SET_OPS = {
+    "$and": lambda a, b: np.intersect1d(a, b, assume_unique=True),
+    "$or": np.union1d,
+    "$not": lambda a, b: np.setdiff1d(a, b, assume_unique=True),
+    "$xor": lambda a, b: np.setxor1d(a, b, assume_unique=True),
+}
 
-    class _Stub:
-        def join(self, *a, **k):
-            return self
 
-        def unionByName(self, *a, **k):
-            return self
+def _eval_dsl(idx, dsl: dict):
+    """The DataFrame evaluator: a reference-DSL query dict → doc_id
+    DataFrame (joins, unions and anti-joins over the leaves' posting
+    DataFrames).  It takes every tree, at any size — the scale path
+    of ``run_dsl_query`` and the plan ``query --dry-run`` prints."""
 
-        def distinct(self):
-            return self
+    def ev(node):
+        op, *rest = node
+        if op in _SET_OPS:
+            a, *others = (ev(c) for c in rest[0])
+            if op == "$and":
+                for d in others:
+                    a = a.join(d, "doc_id", "inner")
+            elif op == "$or":
+                for d in others:
+                    a = a.unionByName(d)
+                a = a.distinct()
+            elif op == "$not":
+                a = a.join(others[0], "doc_id", "left_anti")
+            else:  # $xor
+                (b,) = others
+                a = a.join(b, "doc_id", "left_anti").unionByName(
+                    b.join(a, "doc_id", "left_anti")
+                )
+            return a.orderBy("doc_id")
+        field, kwargs = rest
+        return getattr(idx, op)(field=field, **kwargs)
 
-        def orderBy(self, *a, **k):
-            return self
+    return ev(validate_dsl(dsl))
 
-    class _StubIdx:
-        def prefix_docs(self, prefix, field="text"):
-            return _Stub()
 
-        def term_docs(self, term, field="text"):
-            return _Stub()
+def _array_terms(idx, tree) -> dict[str, list[str]] | None:
+    """The evaluator rule: ``{field: [terms]}`` of the tree's leaves
+    when ``run_dsl_query`` evaluates it as sorted doc-id arrays, else
+    None (the DataFrame evaluator).  Arrays when both hold:
 
-        def fuzzy_docs(self, term, field="text", max_dist=1):
-            return _Stub()
+    - every node is ``$and``/``$or``/``$not``/``$xor`` or a plain
+      term leaf (``$prefix``/``$fuzzy``/``$wildcard``/``$phrase``/
+      ``$near`` anywhere → DataFrames);
+    - the distinct leaves' summed df (memoized terms-table metadata)
+      is ≤ ``SparkIndex.LOCAL_SCORE_MAX_POSTINGS`` — the BM25 local
+      path's cap."""
+    terms: dict[str, list[str]] = {}
 
-        def wildcard_docs(self, pattern, field="text"):
-            return _Stub()
+    def walk(node) -> bool:
+        op, *rest = node
+        if op in _SET_OPS:
+            return all(walk(c) for c in rest[0])
+        if op != "term_docs":
+            return False
+        field, kwargs = rest
+        ts = terms.setdefault(field, [])
+        if kwargs["term"] not in ts:
+            ts.append(kwargs["term"])
+        return True
 
-        def phrase_docs(self, phrase, field="text"):
-            return _Stub()
-
-        def near_docs(self, a, b, max_dist=3, field="text"):
-            return _Stub()
-
-    _eval_dsl(_StubIdx(), dsl)
+    if not walk(tree):
+        return None
+    vol = sum(
+        df
+        for field, ts in terms.items()
+        for df, _ in idx._term_meta(ts, field).values()
+    )
+    return terms if vol <= idx.LOCAL_SCORE_MAX_POSTINGS else None
 
 
 def run_dsl_query(idx, dsl: dict, limit: int) -> tuple[int, list]:
-    """Evaluate a boolean-DSL dict → (total, stored doc Rows).  The id
-    set persists for the request: the doc materialization and the
-    total would otherwise each re-run the full boolean plan (2× the
-    posting work).  The ONE query-DSL execution sequence — shared by
-    ``cmd_query`` and the HTTP search route so the transports cannot
-    drift."""
-    ids = _eval_dsl(idx, dsl).persist()
-    try:
-        rows = idx.get_docs(ids, limit=limit).collect()
-        total = ids.count()
-    finally:
-        ids.unpersist()
-    return total, rows
+    """Evaluate a boolean-DSL dict → (total, the first ``limit``
+    stored doc Rows in doc_id order).  The ONE query-DSL execution
+    sequence — shared by ``cmd_query`` and the HTTP search route so
+    the transports cannot drift.
+
+    A small plain-term tree (the rule: ``_array_terms``) runs no
+    Spark job: its leaves are read per field with one Arrow read and
+    decoded to sorted doc_id arrays, the operators are numpy set
+    operations, ``total`` is the result's length, and the page is an
+    Arrow read of the first ids' ``doc_part=`` directories
+    (``SparkIndex.doc_rows``).  Every other tree goes through
+    ``_eval_dsl``; its id set persists for the request, since the doc
+    materialization and the total would otherwise each re-run the
+    full boolean plan."""
+    tree = validate_dsl(dsl)
+    terms = _array_terms(idx, tree)
+    if terms is None:
+        ids = _eval_dsl(idx, dsl).persist()
+        try:
+            rows = idx.get_docs(ids, limit=limit).collect()
+            total = ids.count()
+        finally:
+            ids.unpersist()
+        return total, rows
+    arrays = {f: idx.term_doc_arrays(ts, f) for f, ts in terms.items()}
+
+    def ev(node):
+        op, *rest = node
+        if op in _SET_OPS:
+            return reduce(_SET_OPS[op], (ev(c) for c in rest[0]))
+        field, kwargs = rest
+        return arrays[field][kwargs["term"]]
+
+    ids = ev(tree)
+    return int(ids.size), idx.doc_rows(ids, limit=limit)
 
 
 def cmd_query(args) -> int:
@@ -248,7 +298,13 @@ def cmd_query(args) -> int:
         # physical plan — pushed filters visible — without executing
         ids = _eval_dsl(idx, dsl)
         plan = ids._jdf.queryExecution().executedPlan().toString()
-        print(json.dumps({"dry_run": True, "dsl": dsl, "plan": plan}))
+        arrays = _array_terms(idx, validate_dsl(dsl)) is not None
+        print(json.dumps({
+            "dry_run": True,
+            "dsl": dsl,
+            "evaluator": "arrays" if arrays else "dataframe",
+            "plan": plan,
+        }))
         return 0
     total, rows = run_dsl_query(idx, dsl, limit=args.limit)
     results = [r.asDict() for r in rows]

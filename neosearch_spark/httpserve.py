@@ -358,9 +358,7 @@ class _Handler(BaseHTTPRequestHandler):
                 self._send({"error": f"document {int_id} not found"}, 400)
                 return
             idx = srv.open(name)
-            rows = idx.get_docs(
-                srv.spark.createDataFrame([(int_id,)], "doc_id long")
-            ).collect()
+            rows = idx.doc_rows([int_id])
             if not rows:
                 self._send({"error": f"document {int_id} not found"}, 400)
                 return

@@ -613,10 +613,11 @@ class SparkIndex:
         source's UNIQUE tokens highest (idf is maximal at df=1) and
         the expanded query would match only the source itself.
 
-        Cost: ONE doc-store point lookup (broadcast-joined id) +
-        the memoized term-metadata probe for idf + one standard
-        top-k query — the expansion never touches postings.  Like
-        ``get_docs``, the source lookup reads the doc store."""
+        Cost: ONE doc-store point lookup (``doc_rows``: an Arrow
+        read of the doc's ``doc_part=`` directory) + the memoized
+        term-metadata probe for idf + one standard top-k query — the
+        expansion never touches postings.  Like ``get_docs``, the
+        source lookup reads the doc store."""
         return self._topk_df(
             self._mlt_rows(doc_id, field, n_terms, k, exclude_self, min_df)
         )
@@ -631,13 +632,15 @@ class SparkIndex:
         min_df: int = 2,
     ) -> list[tuple[int, float]]:
         """``more_like_this``'s (doc_id, score) rows, on the driver."""
-        ids = self.spark.createDataFrame([(int(doc_id),)], "doc_id long")
-        rows = self.get_docs(ids).select(
-            F.col(field).cast("string").alias("t")
-        ).collect()
+        rows = self.doc_rows([int(doc_id)])
         if not rows:
             raise KeyError(f"doc_id {doc_id} is not in the doc store")
-        text = rows[0]["t"] or ""
+        text = rows[0]
+        for part in field.split("."):  # a struct path: "address.city"
+            text = text[part] if text is not None else None
+        if isinstance(text, list):  # array<string>, as Spark casts it
+            text = "[" + ", ".join("null" if t is None else t for t in text) + "]"
+        text = text or ""
         toks = [t for t in text.strip(" ").lower().split(" ") if t != ""]
         tf: dict[str, int] = {}
         for t in toks:
@@ -725,6 +728,99 @@ class SparkIndex:
         out = self.docs.join(F.broadcast(ids), "doc_id")
         if limit is not None:
             out = out.orderBy("doc_id").limit(limit)
+        return out
+
+    def doc_rows(self, ids, limit: int | None = None) -> list:
+        """``get_docs(ids, limit).collect()`` on the driver: the first
+        ``limit`` doc-store Rows of the ids in doc_id order (all of
+        them when ``limit`` is None), skipping ids without a doc-store
+        row (streamed docs).  Read with pyarrow from the ids'
+        ``doc_part=`` directories only — no Spark job — against the
+        manifest's ``docs_schema``, and converted to Rows with
+        ``doc_id`` first, as the join emits them, so replies are
+        byte-identical.  An index whose manifest records no
+        ``docs_schema`` takes ``get_docs``."""
+        p = self.manifest["params"]
+        if not p.get("docs_schema") or not p.get("docs_span"):
+            ids_df = self.spark.createDataFrame(
+                [(int(i),) for i in ids], "doc_id long"
+            )
+            return self.get_docs(ids_df, limit=limit).collect()
+        if limit is not None and limit < 0:
+            raise ValueError(f"limit must be non-negative, got {limit}")
+        from pyspark.sql.conversion import ArrowTableToRowsConversion
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import StructType
+
+        schema = StructType.fromJson(json.loads(p["docs_schema"]))
+        # the explicit Arrow schema casts timestamps to us/UTC, the
+        # form the Row converter turns into local naive datetimes
+        # exactly like collect()
+        arrow_schema = to_arrow_schema(schema)
+        cols = ["doc_id"] + [n for n in schema.fieldNames() if n != "doc_id"]
+        row_schema = StructType([schema[n] for n in cols])
+        root = os.path.join(self.index_dir, "docs")
+        docs_span = int(p["docs_span"])
+        ids = np.unique(np.asarray(ids, dtype=np.int64))
+        want = ids.size if limit is None else limit
+        out: list = []
+        pos = 0
+        # the next (want − found) ids at a time: a page needs one read
+        # unless some of its ids have no doc-store row
+        while len(out) < want and pos < ids.size:
+            chunk = ids[pos : pos + want - len(out)]
+            pos += chunk.size
+            files = []
+            for part in np.unique(chunk // docs_span):
+                d = os.path.join(root, f"doc_part={part}")
+                if os.path.isdir(d):
+                    files += [
+                        os.path.join(d, f)
+                        for f in sorted(os.listdir(d))
+                        if not f.startswith(("_", "."))
+                    ]
+            if not files:
+                continue
+            table = (
+                pads.dataset(
+                    files,
+                    schema=arrow_schema,
+                    format="parquet",
+                    partitioning=pads.partitioning(
+                        pa.schema([("doc_part", pa.int32())]), flavor="hive"
+                    ),
+                    partition_base_dir=root,
+                )
+                .to_table(columns=cols, filter=pads.field("doc_id").isin(chunk))
+                .sort_by("doc_id")
+            )
+            out += ArrowTableToRowsConversion.convert(
+                table, row_schema, binary_as_bytes=False
+            )
+        return out
+
+    def term_doc_arrays(self, terms: list[str], field: str) -> dict[str, np.ndarray]:
+        """{term: sorted doc_id array} for ``terms`` of ``field``: one
+        Arrow read of their bucket directories and one block decode,
+        no Spark job.  Absent terms map to empty arrays."""
+        rows = self._arrow_rows(
+            self._blocks_ds,
+            ["term", "span_id", "first_doc", "n_docs", "docs_enc"],
+            terms,
+            field,
+        )
+        out = {t: np.empty(0, dtype=np.int64) for t in terms}
+        if not rows:
+            return out
+        rows.sort(key=lambda r: (r["term"], r["span_id"], r["first_doc"]))
+        n_docs = np.array([r["n_docs"] for r in rows], dtype=np.int64)
+        ids, _, _ = decode_block_batch(n_docs, [r["docs_enc"] for r in rows])
+        ends = np.cumsum(n_docs)
+        lo = 0
+        for i, r in enumerate(rows):
+            if i + 1 == len(rows) or rows[i + 1]["term"] != r["term"]:
+                out[r["term"]] = ids[lo : ends[i]]
+                lo = ends[i]
         return out
 
     # ---------------- BM25 ----------------

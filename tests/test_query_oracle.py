@@ -530,6 +530,147 @@ def test_cold_single_request_runs_no_spark_job(corpus, monkeypatch):
     assert hot == local
 
 
+def _dsl_reply(rows) -> str:
+    """The HTTP reply body's results, as bytes would leave the server."""
+    import json
+
+    from neosearch_spark.httpserve import _public_doc
+
+    return json.dumps([_public_doc(r) for r in rows], default=str)
+
+
+@pytest.mark.parametrize("op", ["$and", "$or"])
+def test_plain_term_dsl_runs_no_spark_job(corpus, monkeypatch, op):
+    """A plain-term $and/$or DSL request on a freshly opened handle —
+    open, terms probe, posting read, set algebra and the reply page —
+    runs NO Spark job.  Forced onto the DataFrame evaluator, the same
+    request runs Spark jobs and answers the identical (total, rows)."""
+    from neosearch_spark.cli import run_dsl_query
+
+    si, oi, _ = corpus
+    sc = si.spark.sparkContext
+    dsl = {op: [{"text": "tok1"}, {"text": "tok3"}]}
+
+    def fresh_request():
+        return run_dsl_query(SparkIndex(si.spark, si.index_dir), dsl, limit=7)
+
+    (total, rows), jobs = _jobs_in_group(sc, f"dsl_{op}", fresh_request)
+    assert jobs == 0, f"expected no Spark job for a small DSL request, got {jobs}"
+    want = (oi.and_ if op == "$and" else oi.or_)(["tok1", "tok3"])
+    assert total == len(want) and [r["doc_id"] for r in rows] == want[:7]
+    monkeypatch.setattr(SparkIndex, "LOCAL_SCORE_MAX_POSTINGS", 0)
+    (df_total, df_rows), df_jobs = _jobs_in_group(
+        sc, f"dsl_{op}_df", fresh_request
+    )
+    assert df_jobs > 0
+    assert (df_total, df_rows) == (total, rows)
+    assert _dsl_reply(df_rows) == _dsl_reply(rows)
+
+
+def test_dsl_phrase_tree_takes_dataframe_path(corpus, monkeypatch, capsys):
+    """A tree with a $phrase leaf stays on the DataFrame evaluator,
+    and ``query --dry-run`` names the evaluator the rule picks."""
+    import json
+
+    from neosearch_spark import cli
+
+    si, _, _ = corpus
+    dsl = {"$and": [{"text": "tok1"}, {"text": {"$phrase": "neoway business"}}]}
+
+    def evaluator(d):
+        cli.main(["query", "--index", si.index_dir, "--dsl", json.dumps(d),
+                  "--dry-run"])
+        return json.loads(capsys.readouterr().out)["evaluator"]
+
+    assert evaluator(dsl) == "dataframe"
+    assert evaluator({"$or": [{"text": "tok1"}, {"text": "tok2"}]}) == "arrays"
+    calls = []
+    real = cli._eval_dsl
+    monkeypatch.setattr(
+        cli, "_eval_dsl", lambda idx, d: calls.append(d) or real(idx, d)
+    )
+    total, rows = cli.run_dsl_query(si, dsl, limit=5)
+    assert calls == [dsl]
+    want = [r["doc_id"] for r in real(si, dsl).collect()]
+    assert total == len(want) and [r["doc_id"] for r in rows] == want[:5]
+
+
+# plain terms of the fixture corpus: hot tokens, rarer tokens, a
+# whole-string extra term, case variants that are absent (terms are
+# matched as stored, unanalyzed) and terms that never occur
+_DSL_TERMS = [
+    "tok1", "tok2", "tok3", "tok5", "tok9", "tok17", "tok40", "neoway",
+    "google", "neoway teste", "Neoway", "missingterm", "zzabsent",
+]
+
+
+def _dsl_trees():
+    from hypothesis import strategies as st
+
+    leaf = st.sampled_from(_DSL_TERMS).map(lambda t: {"text": t})
+
+    def extend(child):
+        return st.one_of(
+            st.lists(child, min_size=1, max_size=3).map(lambda cs: {"$and": cs}),
+            st.lists(child, min_size=1, max_size=3).map(lambda cs: {"$or": cs}),
+            st.tuples(child, child).map(lambda ab: {"$not": list(ab)}),
+            st.tuples(child, child).map(lambda ab: {"$xor": list(ab)}),
+        )
+
+    return st.recursive(leaf, extend, max_leaves=6)
+
+
+def _oracle_dsl(oi, dsl) -> set:
+    """Set-algebra model of a plain-term DSL tree over the oracle's
+    postings."""
+    if "$and" in dsl:
+        return set.intersection(*(_oracle_dsl(oi, c) for c in dsl["$and"]))
+    if "$or" in dsl:
+        return set.union(*(_oracle_dsl(oi, c) for c in dsl["$or"]))
+    if "$not" in dsl:
+        a, b = (_oracle_dsl(oi, c) for c in dsl["$not"])
+        return a - b
+    if "$xor" in dsl:
+        a, b = (_oracle_dsl(oi, c) for c in dsl["$xor"])
+        return a ^ b
+    return set(oi.term(dsl["text"]))
+
+
+def test_random_dsl_trees_arrays_equal_dataframe_and_oracle(corpus):
+    """Random $and/$or/$not/$xor nesting over fixture terms (absent
+    ones included): the array evaluator ≡ the DataFrame evaluator ≡
+    the OracleIndex set model, on total, page ids and the reply JSON."""
+    from hypothesis import HealthCheck, given, settings
+
+    from neosearch_spark import cli
+
+    si, oi, _ = corpus
+    limit = 5
+
+    @given(dsl=_dsl_trees())
+    @settings(
+        max_examples=40,
+        deadline=None,
+        derandomize=True,
+        suppress_health_check=[HealthCheck.function_scoped_fixture],
+    )
+    def check(dsl):
+        assert cli._array_terms(si, cli.validate_dsl(dsl)) is not None
+        total, rows = cli.run_dsl_query(si, dsl, limit)
+        want = sorted(_oracle_dsl(oi, dsl))
+        assert total == len(want), dsl
+        assert [r["doc_id"] for r in rows] == want[:limit], dsl
+        with pytest.MonkeyPatch.context() as mp:
+            # -1, not 0: a tree whose terms are all absent sums to df 0
+            mp.setattr(SparkIndex, "LOCAL_SCORE_MAX_POSTINGS", -1)
+            assert cli._array_terms(si, cli.validate_dsl(dsl)) is None
+            df_total, df_rows = cli.run_dsl_query(si, dsl, limit)
+        assert df_total == total, dsl
+        assert _dsl_reply(df_rows) == _dsl_reply(rows), dsl
+
+    check()
+
+
 def test_batch_distributed_identical_and_bounded_jobs(corpus, monkeypatch):
     """Forcing every query hot routes the batch through the
     distributed batched-WAND path: results stay bit-identical to the
